@@ -13,9 +13,12 @@ don't reach 1.0 on identical strings, README.md:141-142 — a quirk we fix,
 SURVEY §2.9).
 
 Jaro-Winkler (the north rule's tie-break) runs as an Arrow-batched pandas
-UDF on ONLY the borderline band tau_lo ≤ cos < tau_hi — at well-separated
-thresholds that band is a small fraction of pairs, so the O(len²) Python
-cost is off the critical path.
+UDF on ONLY the borderline band tau_lo ≤ cos < tau_hi. That band is not a
+small fraction of pairs: on the default generator it holds most of them
+(SURVEY §11: 291,401 of 392,038 scored pairs, 74%, at 50k entities). Its
+cost is kept proportional to its rows by a linear-time batch kernel
+(functions/jaro_winkler.py) and by sizing the Python stage to the band
+(:func:`jw_partitions`).
 """
 
 from __future__ import annotations
@@ -26,20 +29,14 @@ from ..config import PipelineConfig
 from ..functions.jaro_winkler import make_jw_udf
 
 
-def cosine_expr(va, vb, norm_a, norm_b):
-    """Column: cosine similarity of two map<string,double> TF-IDF vectors.
-
-    NOTE: kept for API/testing convenience. Catalyst's MapData is an
-    unsorted array — ``map_zip_with`` probes it linearly per key, making
-    this O((n+m)²) string comparisons per pair (measured ~40 core-ms on
-    ~110-token conversations). The hot path uses the exploded-join dot
-    product in :func:`score_pairs` instead."""
-    prods = F.map_zip_with(
-        va, vb, lambda _, x, y: F.coalesce(x, F.lit(0.0)) * F.coalesce(y, F.lit(0.0))
-    )
-    dot = F.aggregate(F.map_values(prods), F.lit(0.0), lambda acc, v: acc + v)
-    denom = norm_a * norm_b
-    return F.when(denom > 0, dot / denom).otherwise(F.lit(0.0))
+def jw_partitions(n_band: int, batch_rows: int, max_partitions: int) -> int:
+    """Python tasks for a Jaro-Winkler band of ``n_band`` rows: one per
+    Arrow batch of ``batch_rows`` (``spark.sql.execution.arrow.
+    maxRecordsPerBatch``; ≤ 0 means unbounded), at least 1, at most
+    ``max_partitions``."""
+    if batch_rows <= 0:
+        return 1
+    return max(1, min(-(-n_band // batch_rows), max_partitions))
 
 
 def score_pairs(
@@ -213,35 +210,50 @@ def score_pairs(
 
     scored = materialize(scored, cfg, eager=True)
 
-    # Jaro-Winkler tie-break for the borderline band only. The prefix
-    # truncation happens HERE, JVM-side, so only jw_prefix_chars (not the
-    # full multi-KB canonical text) is shuffled and Arrow-shipped into the
-    # Python workers.
-    jw_udf = make_jw_udf(cfg.jw_prefix_chars)
-    prefix = F.substring(F.col("canonical_text"), 1, cfg.jw_prefix_chars)
-    texts_a = conversations.select(
-        F.col("conv_id").alias("conv_id_a"), prefix.alias("text_a")
-    )
-    texts_b = conversations.select(
-        F.col("conv_id").alias("conv_id_b"), prefix.alias("text_b")
-    )
     borderline = scored.filter(F.col("cosine") < cfg.tau_hi)
-    confident = scored.filter(F.col("cosine") >= cfg.tau_hi).withColumn(
+    scored_all = scored.filter(F.col("cosine") >= cfg.tau_hi).withColumn(
         "jw", F.lit(None).cast("double")
     )
-    borderline = (
-        borderline.join(texts_a, "conv_id_a")
-        .join(texts_b, "conv_id_b")
-        # Round-robin to full width before the Python stage: the band is
-        # small in BYTES, so AQE's byte-based coalescing would collapse
-        # the post-join partitions and serialize the compute-bound
-        # O(prefix²) JW work onto a couple of cores (same pathology as
-        # the CC-loop advisory-size experiment, session.py).
-        .repartition(cfg.shuffle_partitions)
-        .withColumn("jw", jw_udf("text_a", "text_b"))
-        .drop("text_a", "text_b")
-    )
-    scored_all = confident.unionByName(borderline)
+    # One small job on the checkpointed frame sizes the Python stage; an
+    # empty band runs none.
+    n_band = borderline.count()
+    if n_band:
+        # Jaro-Winkler tie-break for the borderline band only. The prefix
+        # truncation happens HERE, JVM-side, so only jw_prefix_chars (not
+        # the full multi-KB canonical text) is shuffled and Arrow-shipped
+        # into the Python workers.
+        jw_udf = make_jw_udf(cfg.jw_prefix_chars)
+        prefix = F.substring(F.col("canonical_text"), 1, cfg.jw_prefix_chars)
+        texts_a = conversations.select(
+            F.col("conv_id").alias("conv_id_a"), prefix.alias("text_a")
+        )
+        texts_b = conversations.select(
+            F.col("conv_id").alias("conv_id_b"), prefix.alias("text_b")
+        )
+        batch_rows = int(
+            scored.sparkSession.conf.get(
+                "spark.sql.execution.arrow.maxRecordsPerBatch", "10000"
+            )
+        )
+        borderline = (
+            borderline.join(texts_a, "conv_id_a")
+            .join(texts_b, "conv_id_b")
+            # Round-robin to one task per Arrow batch, not to full width:
+            # each Python task pays a fixed ~0.24 s of worker CPU before
+            # its first row (4-vCPU host, Python 3.11, Spark 4.1).
+            # pyspark's worker_util.setup_spark_files calls
+            # importlib.invalidate_caches(), which makes every zipimporter
+            # re-read pyspark.zip's directory. A trivial pandas UDF costs
+            # ~1.95 s of Python CPU over 8 tasks and ~0.25 s in one. The
+            # explicit width also keeps AQE's byte-based coalescing, which
+            # undercounts this compute-bound stage, from deciding it.
+            .repartition(
+                jw_partitions(n_band, batch_rows, cfg.shuffle_partitions)
+            )
+            .withColumn("jw", jw_udf("text_a", "text_b"))
+            .drop("text_a", "text_b")
+        )
+        scored_all = scored_all.unionByName(borderline)
     # Second (cheap) materialization: cached scan + JW once; callers must
     # not materialize again. The intermediate checkpoint's blocks are
     # released by GC once `scored` goes out of scope.

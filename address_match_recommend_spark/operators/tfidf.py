@@ -4,8 +4,9 @@ Analog of the reference's ``statInverseDocRefers`` (document-frequency
 count, /root/reference/core/similarity.go:233-255) and IDF formula
 (:342-364). We implement the *documented* math — true float division,
 ``idf = max(ln(N/(df+1)), 0)`` — not the reference's integer-division quirk
-(:355, SURVEY §2.9); numeric/ANSI tokens get the reference's fixed idf=2.0
-and unseen tokens MissingIdf=4.0 (:19) via :func:`idf_for_tokens`.
+(:355, SURVEY §2.9), nor its fixed idf=2.0 for numeric/ANSI tokens
+(:356-360). Unseen tokens get MissingIdf=4.0 (:19, ``cfg.missing_idf``)
+in :func:`tfidf_vectors`.
 
 Scale notes:
 - df computation is distinct + groupBy — two shuffles on (conv_id, token)
@@ -23,10 +24,6 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import PipelineConfig
 
-#: reference FixedIdf for pure-ASCII/numeric terms
-#: (/root/reference/core/similarity.go:18, utils IsAnsiChars/IsNumericChars)
-ANSI_NUMERIC_IDF = 2.0
-
 
 def document_frequency(tokens: DataFrame) -> DataFrame:
     """(token, df) — number of distinct conversations containing token."""
@@ -42,24 +39,14 @@ def idf_table(
     tokens: DataFrame,
     n_docs: int,
     cfg: PipelineConfig | None = None,
-    reference_parity: bool = False,
 ) -> DataFrame:
-    """(token, df, idf).
-
-    ``reference_parity=True`` reproduces the reference's fixed idf=2.0 for
-    pure-alpha/numeric tokens (/root/reference/core/similarity.go:356-360);
-    the default keeps the pure corpus statistic, which is strictly more
-    faithful to the documented TF-IDF semantics (README.md:77-83).
-    """
+    """(token, df, idf) — the pure corpus statistic, the documented TF-IDF
+    semantics (README.md:77-83)."""
     cfg = cfg or PipelineConfig()
     idf = F.greatest(
         F.log(F.lit(float(n_docs)) / (F.col("df") + F.lit(1.0))),
         F.lit(float(cfg.min_idf)),
     )
-    if reference_parity:
-        idf = F.when(
-            F.col("token").rlike(r"^[0-9]+$|^[a-z]+$"), F.lit(ANSI_NUMERIC_IDF)
-        ).otherwise(idf)
     return document_frequency(tokens).withColumn("idf", idf)
 
 

@@ -13,13 +13,49 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+#: share of MemTotal the driver heap may take; the rest is left to the
+#: Python workers, the OS page cache and the shuffle/spill files
+HEAP_SHARE = 0.45
+_MEM_UNITS = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+
+
+def host_cores() -> int:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def host_mem_total_kb() -> int:
+    """MemTotal from /proc/meminfo, in KiB."""
+    with open("/proc/meminfo") as f:
+        return next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+
+
+def host_heap_mb() -> int:
+    """Largest driver heap this host allows: HEAP_SHARE of MemTotal, MiB."""
+    return int(host_mem_total_kb() * HEAP_SHARE / 1024)
+
+
+def jvm_size_mb(size: str) -> int:
+    """MiB in a JVM memory size such as ``"16g"`` or ``"6144m"`` (no
+    unit means MiB, as for ``spark.driver.memory``)."""
+    num, unit = size.strip().lower(), "m"
+    if num[-1] in _MEM_UNITS:
+        num, unit = num[:-1], num[-1]
+    return int(float(num) * _MEM_UNITS[unit])
+
+
+def driver_memory_mb(requested: str | None = None) -> int:
+    """Driver heap for ``requested`` (None means the host's largest),
+    capped at :func:`host_heap_mb`."""
+    cap = host_heap_mb()
+    return cap if requested is None else min(jvm_size_mb(requested), cap)
 
 
 def get_spark(
     app_name: str = "address_match_recommend_spark",
     cores: int | str | None = None,
     shuffle_partitions: int | None = None,
-    driver_memory: str = "48g",
+    driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
@@ -28,9 +64,14 @@ def get_spark(
     on (all pandas UDFs cross the JVM/Python boundary in columnar batches),
     and the session timezone is pinned to UTC so results compare cleanly
     against DuckDB oracles.
+
+    Cores default to :func:`host_cores`; the driver heap is
+    ``driver_memory`` capped at, and by default equal to,
+    :func:`host_heap_mb` — a local-mode JVM sized past the host's memory
+    is killed by the kernel, not by Spark.
     """
     if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
+        cores = host_cores()
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     if shuffle_partitions is None:
         shuffle_partitions = int(
@@ -61,7 +102,7 @@ def get_spark(
         # minShare 0 — no allocation file needed. Single-job workloads
         # are unaffected (scheduling mode is moot with one job running).
         .config("spark.scheduler.mode", "FAIR")
-        .config("spark.driver.memory", driver_memory)
+        .config("spark.driver.memory", f"{driver_memory_mb(driver_memory)}m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -12,12 +12,9 @@ from address_match_recommend_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(
-        app_name="tests",
-        cores=8,
-        shuffle_partitions=8,
-        driver_memory="16g",
-    )
+    # cores and heap come from the host (session.host_cores/host_heap_mb):
+    # a fixed 8 cores / 16g heap got the JVM OOM-killed on a 15 GB host
+    s = get_spark(app_name="tests", shuffle_partitions=8)
     yield s
 
 

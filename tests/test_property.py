@@ -285,11 +285,11 @@ def test_candidate_pairs_equals_model(spark, docs, min_shared):
 )
 @settings(max_examples=200, deadline=None)
 def test_jaro_winkler_batch_equals_scalar(pairs):
-    """The batch-vectorized JW kernel (sentinel consumption + uint8
-    narrowing + uniform-window fast path) is the SAME function as the
-    scalar reference on arbitrary unicode, including the sentinel-
-    adjacent code points, empty strings, and mixed-length batches that
-    exercise the non-uniform window path."""
+    """The batch-vectorized JW kernel (linear-time pass, uint8 narrowing,
+    dense char ids outside 8 bits) is the SAME function as the scalar
+    reference on arbitrary unicode, including the 254/255 code points at
+    the narrowing boundary, empty strings, and mixed-length batches with
+    a different window per row."""
     from address_match_recommend_spark.functions.jaro_winkler import (
         jaro_winkler,
         jaro_winkler_batch,
@@ -302,3 +302,38 @@ def test_jaro_winkler_batch_equals_scalar(pairs):
     got = jaro_winkler_batch([a for a, _ in pairs], [b for _, b in pairs])
     for k, (a, b) in enumerate(pairs):
         assert got[k] == pytest.approx(jaro_winkler(a, b), abs=1e-12)
+
+
+@st.composite
+def _small_alphabet_pairs(draw):
+    """Pairs of strings up to ~600 chars over one 2-4-letter alphabet:
+    every character recurs hundreds of times, so most occurrences fall
+    below the window floor before they can be matched."""
+    alphabet = draw(st.sampled_from(["ab", "abc", "abcd", "xy ", "aĀ", "日本語"]))
+    lengths = st.integers(0, 600)
+    return draw(
+        st.lists(
+            st.tuples(
+                lengths.flatmap(lambda n: st.text(alphabet, min_size=n, max_size=n)),
+                lengths.flatmap(lambda n: st.text(alphabet, min_size=n, max_size=n)),
+            ),
+            min_size=1,
+            max_size=6,
+        )
+    )
+
+
+@given(_small_alphabet_pairs())
+@settings(max_examples=60, deadline=None)
+def test_jaro_winkler_batch_small_alphabets(pairs):
+    """The linear-time pass skips occurrences under the window floor
+    without scanning them; on long strings over tiny alphabets (8-bit and
+    not) it is still bit-identical to the scalar loop."""
+    from address_match_recommend_spark.functions.jaro_winkler import (
+        jaro_winkler,
+        jaro_winkler_batch,
+    )
+
+    got = jaro_winkler_batch([a for a, _ in pairs], [b for _, b in pairs])
+    for k, (a, b) in enumerate(pairs):
+        assert got[k] == jaro_winkler(a, b)

@@ -8,7 +8,11 @@ from pyspark.sql import functions as F
 from address_match_recommend_spark.config import PipelineConfig
 from address_match_recommend_spark.functions.jaro_winkler import jaro_winkler
 from address_match_recommend_spark.functions.tokenize import explode_tokens
-from address_match_recommend_spark.operators.scoring import score_pairs, top_k_matches
+from address_match_recommend_spark.operators.scoring import (
+    jw_partitions,
+    score_pairs,
+    top_k_matches,
+)
 from address_match_recommend_spark.operators.tfidf import idf_table, tfidf_vectors
 
 
@@ -82,3 +86,64 @@ def test_top_k(spark, scored_fixture):
     assert top1["d1"]["match_id"] == "d2"
     assert top1["d1"]["cosine"] == pytest.approx(1.0)
     assert top1["d3"]["match_id"] == "d1"
+
+
+@pytest.mark.parametrize(
+    "n_band, batch_rows, want",
+    [
+        (0, 10_000, 1),
+        (1, 10_000, 1),
+        (10_000, 10_000, 1),
+        (10_001, 10_000, 2),
+        (10**6, 10_000, 8),
+        (10**6, 0, 1),  # maxRecordsPerBatch ≤ 0: batches are unbounded
+    ],
+)
+def test_jw_partitions_one_task_per_arrow_batch(n_band, batch_rows, want):
+    assert jw_partitions(n_band, batch_rows, 8) == want
+
+
+def test_empty_band_keeps_rows_and_columns(spark, scored_fixture):
+    """tau_lo = tau_hi leaves no borderline band: every kept pair is
+    confident, the output has the columns of a run with a band, and
+    ``jw`` is null."""
+    conv, vectors, pairs = scored_fixture
+    cfg = PipelineConfig(tau_lo=0.3, tau_hi=0.3)
+    out = score_pairs(pairs, vectors, conv, cfg)
+    with_band = score_pairs(pairs, vectors, conv, PipelineConfig(tau_lo=0.3, tau_hi=0.95))
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in with_band.schema
+    ]
+    cosine_only = {
+        (r["conv_id_a"], r["conv_id_b"]): (r["cosine"], r["is_match"])
+        for r in score_pairs(pairs, vectors, None, cfg).collect()
+    }
+    got = out.collect()
+    assert {(r["conv_id_a"], r["conv_id_b"]): (r["cosine"], r["is_match"]) for r in got} == cosine_only
+    assert len(got) == len(cosine_only) == 2
+    assert all(r["jw"] is None for r in got)
+
+
+def test_band_jw_equals_scalar_on_prefixes(spark, tiny_corpus):
+    """Every band row's jw is the scalar Jaro-Winkler of the two
+    conversations' jw_prefix_chars prefixes, bit for bit."""
+    golden = tiny_corpus.golden_canonical
+    text = dict(zip(golden.conv_id, golden.canonical_text))
+    conv = spark.createDataFrame(
+        golden[["conv_id", "canonical_text"]], "conv_id string, canonical_text string"
+    )
+    tokens = explode_tokens(conv)
+    vectors = tfidf_vectors(tokens, idf_table(tokens, len(text)))
+    labeled = tiny_corpus.labeled_pairs
+    pairs = spark.createDataFrame(
+        sorted({tuple(sorted(p)) for p in zip(labeled.conv_id_a, labeled.conv_id_b)}),
+        "conv_id_a string, conv_id_b string",
+    )
+    # tau_hi above any cosine puts every scored pair in the band
+    cfg = PipelineConfig(tau_lo=0.0, tau_hi=1.01, jw_prefix_chars=64)
+    band = score_pairs(pairs, vectors, conv, cfg).collect()
+    assert len(band) > 20
+    p = cfg.jw_prefix_chars
+    for r in band:
+        a, b = text[r["conv_id_a"]], text[r["conv_id_b"]]
+        assert r["jw"] == jaro_winkler(a[:p], b[:p]), (r["conv_id_a"], r["conv_id_b"])
