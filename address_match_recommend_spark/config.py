@@ -7,7 +7,7 @@ The knobs mirror the reference's hand-coded constants (boost table
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -102,31 +102,6 @@ class PipelineConfig:
     #: count is exact for conversations with ≤ cap blockable tokens.
     #: Irrelevant when the budget is on (the set is already ≤ budget).
     toks_payload_cap: int = 256
-    #: reference-parity recall mode: admit a pair on a single shared
-    #: SALTED blocking key even below min_shared_tokens (the reference
-    #: admits candidates on one shared key, /root/reference/core/
-    #: similarity.go:74-79). Off by default — the round-2 unconditional
-    #: bypass re-admitted unbounded noise from hot tokens: one token with
-    #: df=10^6 and salt_bucket=50 yields ~2·10^4 sub-blocks × ~1,225 pairs
-    #: ≈ 2.5·10^7 single-shared-hot-token pairs PER HOT TOKEN, all
-    #: forwarded to the dominant-cost scoring stage. Cost envelope when
-    #: on: ≤ salt_bucket·(salt_bucket−1)/2 · ceil(df/salt_bucket) extra
-    #: pairs per hot token, i.e. O(df·salt_bucket/2) — linear in df, not
-    #: quadratic, but unbounded across hot tokens. Turn on only when
-    #: recall of single-hot-token matches matters more than scoring cost.
-    admit_single_salted: bool = False
-    #: hard per-hot-token budget on bypass-admitted pairs when
-    #: admit_single_salted is ON (round-2 ask, closed r4): each (token,
-    #: salt) sub-block admits at most ceil(budget / n_salts) pairs that
-    #: qualify ONLY via the single-salted-key bypass, so one hot token
-    #: admits at most budget + ceil(df/salt_bucket) such pairs total —
-    #: bounded regardless of df (the uncapped envelope was
-    #: O(df·salt_bucket/2) per hot token). Enforced by a row_number
-    #: window over (token, salt) — partitions are ≤ salt_bucket²/2 rows,
-    #: so the cap itself cannot skew. Deterministic: pairs are kept in
-    #: xxhash64(pair) order. Pairs meeting min_shared_tokens are never
-    #: budgeted.
-    single_salted_pair_budget: int = 1000
 
     # --- structure-aware scoring (reference C14 boosts) ---
     #: tokenize with typed structural tokens (role:/tool:/nturns:) and
@@ -135,14 +110,6 @@ class PipelineConfig:
     #: the nturns near-miss dampening (reference road-number analog,
     #: /root/reference/core/similarity.go:305-316)
     use_structure: bool = False
-    #: closer reference ranking parity (ADVICE r2): dampen the nturns
-    #: cross term whenever RAW turn counts differ, not only when their
-    #: power-of-two buckets differ. The reference dampens any
-    #: RoadNumValue inequality (/root/reference/core/similarity.go:
-    #: 305-316); the default bucket-level behavior keeps the full 3.0
-    #: exact boost for same-bucket pairs (e.g. 9 vs 15 turns). Off by
-    #: default — the F1 gate doesn't need it.
-    nturns_damp_raw: bool = False
     #: reference ranking parity: multiply each matched TEXT term's
     #: doc-side contribution by the pair's coord·density
     #: (/root/reference/core/similarity.go:502-516 — coord/density scale
@@ -150,14 +117,6 @@ class PipelineConfig:
     #: gate doesn't need it, and it adds a coord/density aggregation per
     #: pair; turn on to reproduce the reference's actual ranking.
     use_coord_density: bool = False
-    #: bug-parity mode (SURVEY §2.9/§7): reproduce the reference's
-    #: integer-division quantization of coord/density —
-    #: `float64(matched/count)` in Go truncates, so coord/density each
-    #: collapse to {0.5, 1.0} (1.0 only when every query text term
-    #: matched / the match span is gapless;
-    #: /root/reference/core/similarity.go:466,482). Off by default: the
-    #: engine implements the documented math (true float division).
-    quantize_coord_density: bool = False
 
     # --- scoring ---
     #: accept pair outright when cosine >= tau_hi
@@ -194,21 +153,10 @@ class PipelineConfig:
     #: pandas UDF (cfg.dictionary) on large CJK payloads is the one
     #: known case.
     materialize_tokens: bool = False
-    #: submit independent pipeline stage branches (tokens→vectors vs
-    #: tokens→idf→postings→pairs) from concurrent driver threads so
-    #: their per-stage driver constants (planning + scheduling — the
-    #: core-count-independent Amdahl term) overlap instead of summing;
-    #: tasks share slots via FAIR scheduler pools (session.py). Works
-    #: under a durable Checkpointer too (round 5: per-stage ledger
-    #: subdirectories remove the append race).
-    concurrent_stages: bool = True
     shuffle_partitions: int = 32
-    #: repartition width for the pair-scoring stage; scale with cluster size
-    score_partitions: int | None = None
 
     # --- checkpointing ---
     checkpoint_dir: str | None = None
-    run_id: str = "run0"
     #: swap every in-memory localCheckpoint (ephemeral replication-1
     #: blocks — an executor loss is unrecoverable) for a reliable
     #: Dataset.checkpoint() to the sparkContext checkpoint dir, so a
@@ -216,5 +164,3 @@ class PipelineConfig:
     #: Requires checkpoint_dir (or a pre-set setCheckpointDir). See
     #: materialize.py; orthogonal to the Checkpointer (stage resume).
     reliable_checkpoint: bool = False
-
-    extra: dict = field(default_factory=dict)

@@ -116,25 +116,22 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     stage whose fan-out is already salt-bounded, traded for removing a
     shuffle pair that grows with the (quadratic-ish) raw-pair count.
 
-    Pairs sharing ONLY one salted hot token are admitted only under
-    ``cfg.admit_single_salted`` (reference parity: one shared blocking
-    key suffices, /root/reference/core/similarity.go:74-79). The round-2
-    unconditional bypass re-admitted unbounded hot-token noise into the
-    dominant-cost scoring stage — see the cost envelope on the config
-    field; threshold now applies uniformly to the true count by default.
+    ``min_shared_tokens`` applies to that true pre-salt count, and is the
+    only admission rule: at the default of 2, a pair sharing a single
+    blocking token, hot or cold, never reaches scoring (the reference
+    admits a candidate on one shared key, core/similarity.go:74-79,
+    which for a hot token forwards every sub-block pair to the scoring
+    stage).
     """
     cfg = cfg or PipelineConfig()
     need_count = cfg.min_shared_tokens > 1
     n_salts = F.greatest(
         F.ceil(F.col("df") / F.lit(cfg.salt_bucket)).cast("int"), F.lit(1)
     )
-    cols = ["token", "salt", "conv_id"]
-    if cfg.admit_single_salted:
-        cols.append("n_salts")  # the bypass budget scales per sub-block
-    salted = (
-        post.withColumn("n_salts", n_salts)
-        .withColumn("salt", F.pmod(F.xxhash64("conv_id"), F.col("n_salts")).cast("int"))
-        .select(*cols, (F.col("n_salts") > 1).alias("is_salted"))
+    salted = post.select(
+        "token",
+        F.pmod(F.xxhash64("conv_id"), n_salts).cast("int").alias("salt"),
+        "conv_id",
     )
     if need_count:
         # Per-conversation budgeted token set, hashed to longs for a
@@ -173,50 +170,14 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
             F.col("a.conv_id") < F.col("b.conv_id"),
         ],
     )
-    def pair_ids(m: DataFrame) -> DataFrame:
-        return m.select(
-            F.col("a.conv_id").alias("conv_id_a"),
-            F.col("b.conv_id").alias("conv_id_b"),
-        )
-
     if need_count:
         # Pair-level true count, evaluated per matched row pre-aggregation
-        # (every row of one pair yields the same value). a.is_salted ==
-        # b.is_salted on a matched row (both derive from the token's df).
-        qualifies = (
+        # (every row of one pair yields the same value).
+        matched = matched.filter(
             F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
             >= cfg.min_shared_tokens
         )
-        if cfg.admit_single_salted:
-            # The bypass (pairs admitted on ONE shared salted key, below
-            # the threshold) is budgeted per hot token: each (token,
-            # salt) sub-block keeps at most ceil(budget / n_salts) such
-            # pairs, so a token of any df admits ≤ budget + n_salts
-            # bypass pairs (see config.single_salted_pair_budget). The
-            # row_number window partitions on (token, salt) — bounded at
-            # salt_bucket²/2 rows — and orders by xxhash64(pair) so the
-            # kept subset is deterministic. Threshold-qualified pairs
-            # are never budgeted.
-            per_block_cap = F.greatest(
-                F.ceil(
-                    F.lit(cfg.single_salted_pair_budget) / F.col("a.n_salts")
-                ).cast("int"),
-                F.lit(1),
-            )
-            wb = Window.partitionBy(F.col("a.token"), F.col("a.salt")).orderBy(
-                F.xxhash64(F.col("a.conv_id"), F.col("b.conv_id")),
-                F.col("a.conv_id"),
-                F.col("b.conv_id"),
-            )
-            bypass = (
-                matched.filter(~qualifies & F.col("a.is_salted"))
-                .withColumn("rk", F.row_number().over(wb))
-                .filter(F.col("rk") <= per_block_cap)
-            )
-            return (
-                pair_ids(matched.filter(qualifies))
-                .unionByName(pair_ids(bypass))
-                .distinct()
-            )
-        matched = matched.filter(qualifies)
-    return pair_ids(matched).distinct()
+    return matched.select(
+        F.col("a.conv_id").alias("conv_id_a"),
+        F.col("b.conv_id").alias("conv_id_b"),
+    ).distinct()

@@ -52,14 +52,9 @@ def score_pairs(
     (equi-joins on conv_id — sized by |pairs|, AQE picks the strategy), then
     evaluates cosine JVM-side. If ``conversations`` is given, borderline
     pairs additionally fetch canonical_text and get a Jaro-Winkler score.
-
-    The scoring stage is repartitioned explicitly when
-    cfg.score_partitions is set (north rule: explicit repartitioning) —
-    otherwise AQE's coalescing decides.
+    AQE's coalescing decides the width of the join stages.
     """
     cfg = cfg or PipelineConfig()
-    if cfg.score_partitions:
-        pairs = pairs.repartition(cfg.score_partitions, "conv_id_a")
 
     # Sparse dot product by join (the sparse-matrix-product pattern):
     # explode each side's weight map to (conv_id, token, w), equi-join on
@@ -95,9 +90,9 @@ def score_pairs(
             F.sum(F.when(is_text, prod).otherwise(F.lit(0.0))).alias("dot_text"),
             F.sum(F.when(~is_text, prod).otherwise(F.lit(0.0))).alias("dot_typed"),
         )
-        cd = coord_density(
-            pairs, tokens, quantize=cfg.quantize_coord_density
-        ).select("conv_id_a", "conv_id_b", "coord", "density")
+        cd = coord_density(pairs, tokens).select(
+            "conv_id_a", "conv_id_b", "coord", "density"
+        )
         dots = (
             dots_split.join(cd, ["conv_id_a", "conv_id_b"], "left")
             .withColumn(
@@ -151,27 +146,16 @@ def score_pairs(
         damp = nearmiss_boost(F.col("nt_a") - F.col("nt_b")) / F.lit(
             NTURNS_EXACT_BOOST
         )
-        bucket_differs = nturns_bucket(F.col("nt_a")) != nturns_bucket(
-            F.col("nt_b")
-        )
-        if cfg.nturns_damp_raw:
-            # reference parity (similarity.go:305-316): ANY raw
-            # inequality dampens. Bucket-equal pairs already received the
-            # full w_na·w_nb through the equi-join, so their adjustment
-            # subtracts it and adds the dampened cross term.
-            inequality = F.col("nt_a") != F.col("nt_b")
-            adj = F.when(
-                bucket_differs, F.col("w_na") * F.col("w_nb") * damp
-            ).otherwise(F.col("w_na") * F.col("w_nb") * (damp - F.lit(1.0)))
-        else:
-            inequality = bucket_differs
-            adj = F.col("w_na") * F.col("w_nb") * damp
         nm = (
             pairs.join(sa, "conv_id_a")
             .join(sb, "conv_id_b")
             .filter(F.col("w_na").isNotNull() & F.col("w_nb").isNotNull())
-            .filter(inequality)
-            .select("conv_id_a", "conv_id_b", adj.alias("dot_adj"))
+            .filter(nturns_bucket(F.col("nt_a")) != nturns_bucket(F.col("nt_b")))
+            .select(
+                "conv_id_a",
+                "conv_id_b",
+                (F.col("w_na") * F.col("w_nb") * damp).alias("dot_adj"),
+            )
         )
         dots = (
             dots.join(nm, ["conv_id_a", "conv_id_b"], "left")
@@ -268,11 +252,7 @@ def score_pairs(
     )
 
 
-def coord_density(
-    pairs: DataFrame,
-    tokens: DataFrame,
-    quantize: bool = False,
-) -> DataFrame:
+def coord_density(pairs: DataFrame, tokens: DataFrame) -> DataFrame:
     """Reference-parity coord/density per pair (A4/A5).
 
     The reference computes, over the query doc's text terms
@@ -282,11 +262,8 @@ def coord_density(
     where matchStart/End are positions of matched terms in the query's
     term order. Here "query" is side a of each pair; ``tokens`` is the
     exploded (conv_id, pos, token) table, positions from posexplode
-    (SURVEY §2.5). Uses true float division by default, not the
-    reference's integer-division quantization (SURVEY §2.9);
-    ``quantize=True`` is the bug-parity mode — Go's
-    ``float64(matched/count)`` truncates before the sqrt, collapsing
-    coord/density to {0.5, 1.0} (cfg.quantize_coord_density).
+    (SURVEY §2.5). Uses true float division, not the reference's
+    integer-division quantization (SURVEY §2.9).
 
     All relational: token-intersection join + one aggregation per pair.
 
@@ -319,9 +296,6 @@ def coord_density(
     ratio_d = F.col("matched") / (
         F.col("match_end") - F.col("match_start") + F.lit(1)
     )
-    if quantize:  # Go int-division truncation (similarity.go:466,482)
-        ratio_c = F.floor(ratio_c).cast("double")
-        ratio_d = F.floor(ratio_d).cast("double")
     # NOTE: n_terms is one row PER CONVERSATION — O(corpus) — so it must
     # NOT be broadcast (round-1 fix: a broadcast here OOMs the driver at
     # 10^8+ conversations). It shares the conv_id_a key with `matched`;

@@ -17,13 +17,12 @@ expensive runs. Exact-dup edges re-enter at the clustering stage.
 
 Driver-constant control (round 4): the DAG has two independent branches
 after tokenization — tokens → vectors and tokens → idf → postings →
-candidate pairs — that only re-join at scoring. Under
-``cfg.concurrent_stages`` (default) they are submitted from two driver
-threads, so their per-stage driver constants (Catalyst/AQE planning,
-scheduling — the Amdahl term the N→4N scaling proxy pays at every core
-count) overlap instead of summing, and their tasks share executor slots
-(FAIR scheduler pools, session.py). ``reps.count()`` likewise overlaps
-with the tokenize materialization.
+candidate pairs — that only re-join at scoring. Whenever both run, they
+are submitted from two driver threads, so their per-stage driver
+constants (Catalyst/AQE planning, scheduling — the Amdahl term the N→4N
+scaling proxy pays at every core count) overlap instead of summing, and
+their tasks share executor slots (FAIR scheduler pools, session.py).
+``reps.count()`` likewise overlaps with the tokenize materialization.
 """
 
 from __future__ import annotations
@@ -190,13 +189,13 @@ def run_pipeline(
     if not want("tokenize"):
         return result()
 
-    # Concurrent submission is pointless unless both post-tokenize
-    # branches actually run. It works under a durable Checkpointer too
-    # (round 5): the ledger writes one subdirectory per stage, so the two
-    # branches' appends never share a parquet _temporary commit dir
-    # (sources/checkpoint.py::_ledger) — a cluster run gets resumability
-    # AND overlapped driver constants (VERDICT r4 next #4).
-    parallel = cfg.concurrent_stages and want("candidate_pairs")
+    # The two post-tokenize branches run concurrently whenever both run;
+    # a run stopping before candidate_pairs is sequential. This works
+    # under a durable Checkpointer too (round 5): the ledger writes one
+    # subdirectory per stage, so the two branches' appends never share a
+    # parquet _temporary commit dir (sources/checkpoint.py::_ledger) — a
+    # cluster run gets resumability AND overlapped driver constants.
+    parallel = want("candidate_pairs")
     pool = None
     if parallel:
         from concurrent.futures import ThreadPoolExecutor
@@ -252,46 +251,35 @@ def run_pipeline(
     if not want("vectors"):
         return result()
 
-    if parallel:
-        spark = transcripts.sparkSession
-
-        def vec_branch() -> DataFrame:
-            # distinct FAIR pools so neither branch's stages queue behind
-            # the other's under the session-wide scheduler (session.py)
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "branch-vectors"
+    if not parallel:  # until is "vectors" or "postings"
+        fields["vectors"] = ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+        if want("postings"):
+            fields["postings"] = ckpt(
+                "postings", lambda: postings(tokens, idf, cfg), mode="none"
             )
-            return ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+        return result()
 
-        def pair_branch() -> tuple[DataFrame, DataFrame]:
-            spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "branch-pairs"
-            )
-            p = ckpt("postings", lambda: postings(tokens, idf, cfg), mode="none")
-            return p, ckpt("candidate_pairs", lambda: candidate_pairs(p, cfg))
+    spark = transcripts.sparkSession
 
-        fut_vec = pool.submit(vec_branch)
-        fut_pairs = pool.submit(pair_branch)
-        try:
-            vectors = fields["vectors"] = fut_vec.result()
-            post, pairs = fut_pairs.result()
-            fields["postings"], fields["pairs"] = post, pairs
-        finally:
-            pool.shutdown(wait=True)
-    else:
-        vectors = fields["vectors"] = ckpt(
-            "vectors", lambda: tfidf_vectors(tokens, idf, cfg)
-        )
-        if not want("postings"):
-            return result()
-        post = fields["postings"] = ckpt(
-            "postings", lambda: postings(tokens, idf, cfg), mode="none"
-        )
-        if not want("candidate_pairs"):
-            return result()
-        pairs = fields["pairs"] = ckpt(
-            "candidate_pairs", lambda: candidate_pairs(post, cfg)
-        )
+    def vec_branch() -> DataFrame:
+        # distinct FAIR pools so neither branch's stages queue behind
+        # the other's under the session-wide scheduler (session.py)
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "branch-vectors")
+        return ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+
+    def pair_branch() -> tuple[DataFrame, DataFrame]:
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", "branch-pairs")
+        p = ckpt("postings", lambda: postings(tokens, idf, cfg), mode="none")
+        return p, ckpt("candidate_pairs", lambda: candidate_pairs(p, cfg))
+
+    fut_vec = pool.submit(vec_branch)
+    fut_pairs = pool.submit(pair_branch)
+    try:
+        vectors = fields["vectors"] = fut_vec.result()
+        post, pairs = fut_pairs.result()
+        fields["postings"], fields["pairs"] = post, pairs
+    finally:
+        pool.shutdown(wait=True)
     if not want("scored_pairs"):
         return result()
 

@@ -38,21 +38,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-
-#: dependency order of run_pipeline's stages — invalidating stage k
-#: cascades to every stage after it (a mid-pipeline recompute must never
-#: be mixed with stale downstream checkpoints)
-PIPELINE_STAGE_ORDER = (
-    "conversations",
-    "representatives",
-    "idf",
-    "vectors",
-    "postings",
-    "candidate_pairs",
-    "scored_pairs",
-    "edges",
-    "clusters",
-)
+from ..plans.pipeline import STAGE_ORDER
 
 
 class Checkpointer:
@@ -68,13 +54,11 @@ class Checkpointer:
         root: str,
         run_id: str = "run0",
         fmt: str = "parquet",
-        stage_order: tuple[str, ...] = PIPELINE_STAGE_ORDER,
     ) -> None:
         self.spark = spark
         self.root = root.rstrip("/")
         self.run_id = run_id
         self.fmt = fmt
-        self.stage_order = stage_order
         self.stages_run: list[str] = []
         self.stages_resumed: list[str] = []
 
@@ -84,11 +68,10 @@ class Checkpointer:
 
     def _ledger(self, name: str, stage: str) -> str:
         # One subdirectory per stage (round 5): ledger appends from
-        # CONCURRENT pipeline branches (cfg.concurrent_stages) land in
-        # distinct directories, so two stages finishing together never
-        # race on a shared parquet _temporary commit dir — the conflict
-        # that previously forced checkpointed runs to be sequential
-        # (VERDICT r4 next #4).
+        # run_pipeline's two concurrent branches land in distinct
+        # directories, so two stages finishing together never race on a
+        # shared parquet _temporary commit dir — the conflict that
+        # previously forced checkpointed runs to be sequential.
         return f"{self.root}/{self.run_id}/{name}/{stage}"
 
     def is_complete(self, stage: str) -> bool:
@@ -171,16 +154,16 @@ class Checkpointer:
         """Drop a stage's completion marker so the next run recomputes it.
 
         ``cascade=True`` (default, round-2 fix) also invalidates every
-        LATER stage in ``stage_order``: run_pipeline's ``ckpt()`` reads
+        LATER stage in run_pipeline's ``STAGE_ORDER``: its ``ckpt()`` reads
         back any complete stage without looking at its inputs, so leaving
         downstream markers in place would silently mix a recomputed
         upstream with stale downstream checkpoints. A stage not in
-        ``stage_order`` (ad-hoc use) invalidates only itself.
+        ``STAGE_ORDER`` (ad-hoc use) invalidates only itself.
         """
         targets = [stage]
-        if cascade and stage in self.stage_order:
-            i = self.stage_order.index(stage)
-            targets = list(self.stage_order[i:])
+        if cascade and stage in STAGE_ORDER:
+            i = STAGE_ORDER.index(stage)
+            targets = list(STAGE_ORDER[i:])
         for s in targets:
             marker = os.path.join(self._path(s), "_SUCCESS")
             if os.path.exists(marker):

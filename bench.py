@@ -37,8 +37,11 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from address_match_recommend_spark.session import host_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: SPARK_GRAFT_CPUS, else this process's CPU affinity (as get_spark)
+CPUS = host_cores()
 
 # Shuffle/spill dirs on tmpfs when the box has one (must be set before
 # the JVM starts). Single-node rationale in scaling() below: one shared

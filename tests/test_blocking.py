@@ -58,27 +58,15 @@ def test_per_conv_token_budget(spark, block_input):
 
 def test_salting_bounds_block_size(spark):
     """A planted hot token in 100 docs, every pair sharing ONLY that one
-    token (round-3 budgeted semantics, VERDICT r2 'What's wrong' #3):
-
-    - default (admit_single_salted=False): min_shared_tokens=2 applies
-      uniformly to the TRUE pre-salt shared count → 0 pairs. This is the
-      documented precision mode — no unconditional path from a
-      df ≫ salt_bucket token to the scoring stage.
-    - admit_single_salted=True (reference parity, one shared blocking key
-      suffices, similarity.go:74-79): pairs exist but stay bounded far
-      below the unsalted quadratic — the salt keeps per-sub-block fan-out
-      ≤ salt_bucket·(salt_bucket−1)/2."""
+    token: min_shared_tokens=2 applies to the TRUE pre-salt shared count
+    → 0 pairs. There is no path from a df ≫ salt_bucket token alone to
+    the scoring stage."""
     rows = [(f"c{i:03d}", f"hotkey uniq{i:03d}") for i in range(100)]
     df = spark.createDataFrame(rows, "conv_id string, canonical_text string")
     tokens = explode_tokens(df)
     idf = idf_table(tokens, 100)
     strict = PipelineConfig(max_block_df=500, min_block_df=2, salt_bucket=10)
     assert candidate_pairs(postings(tokens, idf, strict), strict).count() == 0
-    parity = PipelineConfig(
-        max_block_df=500, min_block_df=2, salt_bucket=10, admit_single_salted=True
-    )
-    n = candidate_pairs(postings(tokens, idf, parity), parity).count()
-    assert 0 < n < 100 * 99 / 2 / 3  # far below the unsalted quadratic
 
 
 def test_shared_tokens_counted_pre_salt(spark):
@@ -175,43 +163,6 @@ def test_toks_payload_capped_without_budget(spark):
         F.max("n")
     ).first()[0]
     assert sizes <= cap
-
-
-def test_single_salted_bypass_budget(spark):
-    """Planted hot token: with admit_single_salted ON, bypass-admitted
-    pairs are budgeted per hot token (≤ budget + n_salts), deterministic,
-    and the mode OFF admits none of them (round-2 ask, closed r4)."""
-    from address_match_recommend_spark.operators.blocking import candidate_pairs, postings
-    from address_match_recommend_spark.operators.tfidf import idf_table
-
-    n, bucket, budget = 30, 5, 10
-    rows = [(f"c{i:02d}", 0, "hot") for i in range(n)]
-    tokens = spark.createDataFrame(rows, "conv_id string, pos int, token string")
-    base = dict(
-        max_block_df=1000, min_block_df=2, salt_bucket=bucket,
-        min_shared_tokens=2, single_salted_pair_budget=budget,
-    )
-    cfg_on = PipelineConfig(admit_single_salted=True, **base)
-    cfg_off = PipelineConfig(admit_single_salted=False, **base)
-    post = postings(tokens, idf_table(tokens, n, cfg_on), cfg_on)
-    n_salts = -(-n // bucket)  # ceil
-    got = candidate_pairs(post, cfg_on)
-    k = got.count()
-    assert 0 < k <= budget + n_salts, k
-    # deterministic across runs
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, candidate_pairs(post, cfg_on).collect())
-    )
-    # mode off: single-shared-salted-token pairs below threshold drop
-    post_off = postings(tokens, idf_table(tokens, n, cfg_off), cfg_off)
-    assert candidate_pairs(post_off, cfg_off).count() == 0
-    # threshold-qualified pairs are never budgeted: two convs sharing 3
-    # rare tokens still pair even when they also share the hot token
-    extra = [(c, p, t) for c in ("c00", "c01") for p, t in enumerate(["r1", "r2", "r3"], 1)]
-    tokens2 = spark.createDataFrame(rows + extra, "conv_id string, pos int, token string")
-    post2 = postings(tokens2, idf_table(tokens2, n, cfg_on), cfg_on)
-    got2 = [tuple(r) for r in candidate_pairs(post2, cfg_on).collect()]
-    assert ("c00", "c01") in got2
 
 
 def test_budget_prefers_true_df_over_clamped(spark):

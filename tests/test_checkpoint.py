@@ -30,9 +30,9 @@ def test_checkpointed_pipeline_and_resume(spark, tiny_tables, tmp_path):
     ck1 = Checkpointer(spark, root, run_id="r1")
     res1 = run_pipeline(tiny_tables["transcripts"], checkpointer=ck1)
     clusters1 = _clusters_set(res1.clusters)
-    # round 5: concurrent_stages now runs under a Checkpointer, so the two
-    # post-tokenize branches (vectors | postings→candidate_pairs) complete
-    # in nondeterministic relative order — assert the SET of stages and the
+    # the two post-tokenize branches (vectors | postings→candidate_pairs)
+    # run concurrently under a Checkpointer too, so they complete in
+    # nondeterministic relative order — assert the SET of stages and the
     # DAG constraints instead of one serialized order.
     assert sorted(ck1.stages_run) == sorted(STAGES)
     ran = {s: i for i, s in enumerate(ck1.stages_run)}

@@ -79,31 +79,3 @@ def test_coord_density_folded_into_cosine(spark):
 
     m = (math.sqrt(4 / 7) * 0.5 + 0.5) ** 2
     assert abs(folded - plain * m) < 1e-9
-
-
-def test_quantize_parity_mode(spark):
-    """Bug-parity mode (SURVEY §2.9/§7, cfg.quantize_coord_density):
-    Go truncates matched/count BEFORE the sqrt
-    (/root/reference/core/similarity.go:466,482), so coord/density
-    collapse to {0.5, 1.0} — 1.0 only for a full, gapless match. The
-    partial-match fixture from test_coord_density_hand_computed
-    (matched=3 of 4, span 4) quantizes to 0.5/0.5; the identical-doc
-    fixture stays 1.0/1.0 in both modes."""
-    rows = [
-        ("a", 0, "x"), ("a", 1, "y"), ("a", 2, "z"), ("a", 3, "y"),
-        ("b", 0, "x"), ("b", 1, "y"), ("b", 2, "q"),
-        ("c", 0, "x"), ("c", 1, "y"), ("c", 2, "z"),
-        ("d", 0, "x"), ("d", 1, "y"), ("d", 2, "z"),
-    ]
-    tokens = spark.createDataFrame(rows, "conv_id string, pos int, token string")
-    pairs = spark.createDataFrame(
-        [("a", "b"), ("c", "d")], "conv_id_a string, conv_id_b string"
-    )
-    got = {
-        r["conv_id_a"]: r
-        for r in coord_density(pairs, tokens, quantize=True).collect()
-    }
-    assert got["a"]["coord"] == pytest.approx(0.5)    # floor(3/4) = 0
-    assert got["a"]["density"] == pytest.approx(0.5)  # floor(3/4) = 0
-    assert got["c"]["coord"] == pytest.approx(1.0)    # floor(3/3) = 1
-    assert got["c"]["density"] == pytest.approx(1.0)
