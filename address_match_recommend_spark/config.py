@@ -146,12 +146,13 @@ class PipelineConfig:
     #: (measured at 50k ents: ≤10 s of compute at 2 AND 8 cores), while
     #: checkpointing its ~200×-inflated output is a bandwidth-bound block
     #: write (60-82 s) that no core count speeds up — the single worst
-    #: scaling stage in the whole-job N→4N recordings. Each consumer
-    #: (idf, vectors, postings) instead re-runs the explode inside its
-    #: own shuffle's map side. Turn ON when the tokenizer itself is
-    #: expensive enough to out-cost the write — the dictionary-segmenter
-    #: pandas UDF (cfg.dictionary) on large CJK payloads is the one
-    #: known case.
+    #: scaling stage in the whole-job N→4N recordings. The tokenize
+    #: stage instead runs the explode once, inside the map side of its
+    #: (conv_id, token) counts shuffle, and idf, vectors and postings
+    #: read the counts. ON saves only coord-density scoring's second
+    #: explode, which pays when the tokenizer itself out-costs the write
+    #: — the dictionary-segmenter pandas UDF (cfg.dictionary) on large
+    #: CJK payloads is the one known case.
     materialize_tokens: bool = False
     shuffle_partitions: int = 32
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..config import PipelineConfig
+from .tfidf import conv_tokens
 
 
 def postings(
@@ -41,7 +42,8 @@ def postings(
 ) -> DataFrame:
     """(token, conv_id, df) — the inverted index, restricted to blockable
     tokens (min_block_df ≤ df ≤ max_block_df), at most
-    max_block_tokens_per_conv rarest tokens per conversation."""
+    max_block_tokens_per_conv rarest tokens per conversation. ``tokens``
+    is the raw stream or its ``token_counts``."""
     cfg = cfg or PipelineConfig()
     # ``clamped`` (optional, plans/incremental.py): marks unseen tokens
     # whose df was clamped UP into the blockable band. At equal df the
@@ -57,14 +59,14 @@ def postings(
     # heavy-tailed 10^12-turn vocabulary makes the df∈[2,200] band the
     # BULK of the vocab. AQE broadcasts automatically while it fits under
     # autoBroadcastJoinThreshold and falls back to a shuffled join beyond.
-    # (The conv_id-repartition fusion used in tfidf_vectors was measured
-    # here and REVERTED: unlike the vectors stage — whose doc-length
-    # window re-shuffles the full counted frame — the budget window here
-    # re-shuffles only the df-filtered postings (~5% of the token rows),
-    # while pre-partitioning by conv_id forfeits the distinct's map-side
-    # partial dedup on the big first exchange. Measured a wash at 20k
-    # entities, a likely loss at scale.)
-    post = tokens.select("conv_id", "token").distinct().join(blockable, "token")
+    # Over the pipeline's token_counts frame (its tokenize stage) no
+    # distinct runs, so the only exchange left is the budget window's,
+    # over the df-filtered postings (~5% of the token rows). A raw stream
+    # pays the distinct first. (Pre-partitioning a raw stream by
+    # conv_id, as token_counts does, was measured here and reverted: it
+    # forfeits the distinct's map-side partial dedup on the big first
+    # exchange — a wash at 20k entities, a likely loss at scale.)
+    post = conv_tokens(tokens).join(blockable, "token")
     if cfg.max_block_tokens_per_conv:
         order = [F.asc("df")]
         if has_clamped:
@@ -149,13 +151,14 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
         salted = salted.withColumn("toks", toks)
     # Both sides of the self-join read this; materialized EAGERLY or the
     # first downstream action schedules both sides before either has
-    # populated a lazy cache and the postings plan (tokenize + distinct
-    # + window) runs twice concurrently. Checkpointing also truncates
-    # lineage, so the self-join's driver-side planning sees a LogicalRDD
-    # instead of the full upstream DAG (see plans/pipeline.py ckpt
-    # docstring). cfg.reliable_checkpoint upgrades this to a durable
-    # checkpoint (materialize.py) so executor loss mid-join is
-    # survivable on a real cluster.
+    # populated a lazy cache and the postings plan (join + budget
+    # window, plus explode + distinct over a raw stream) runs twice
+    # concurrently. Checkpointing also truncates lineage, so the
+    # self-join's driver-side planning sees a LogicalRDD instead of the
+    # full upstream DAG (see plans/pipeline.py ckpt docstring).
+    # cfg.reliable_checkpoint upgrades this to a durable checkpoint
+    # (materialize.py) so executor loss mid-join is survivable on a real
+    # cluster.
     from ..materialize import materialize
 
     salted = materialize(salted, cfg, eager=True)

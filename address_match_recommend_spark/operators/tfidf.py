@@ -9,8 +9,15 @@ count, /root/reference/core/similarity.go:233-255) and IDF formula
 in :func:`tfidf_vectors`.
 
 Scale notes:
-- df computation is distinct + groupBy — two shuffles on (conv_id, token)
-  then (token), both map-side combined.
+- The exploded token stream is the largest intermediate (~10² tokens per
+  turn). :func:`token_counts` collapses it ONCE to (conv_id, token,
+  tf_raw) rows; ``run_pipeline`` materializes that frame as its
+  ``tokenize`` stage, and idf, vectors and postings all read it. Each
+  consumer also accepts the raw stream (keyed on the ``tf_raw`` column)
+  and then does the collapse itself.
+- df over the counts is one groupBy on token (map-side combined): the
+  counts are already unique on (conv_id, token), so no distinct runs.
+  Over the raw stream it is distinct + groupBy — two shuffles.
 - The IDF table is O(vocab) rows — broadcast to executors (north rule:
   "broadcast of the IDF dictionary"), never shuffled against the corpus.
 - TF-IDF vectors are carried as ``map<token,double>`` per conversation so
@@ -25,14 +32,39 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..config import PipelineConfig
 
 
+def token_counts(tokens: DataFrame) -> DataFrame:
+    """(conv_id, token, tf_raw[, boost]) — the token stream collapsed to
+    one row per (conversation, token), ``tf_raw`` its occurrence count.
+
+    If ``tokens`` carries a ``boost`` column (structure-aware mode) it is
+    kept: the boost is constant per (conv_id, token), so max() is exact.
+    """
+    aggs = [F.count(F.lit(1)).alias("tf_raw")]
+    if "boost" in tokens.columns:
+        aggs.append(F.max("boost").alias("boost"))
+    # Hash-partitioning by conv_id satisfies the (conv_id, token)
+    # aggregate's clustering (conv_id is a subset of its keys), and when
+    # tfidf_vectors collapses a raw stream itself it also serves the
+    # doc_len window and the per-conversation map build: one exchange
+    # for that whole stage. The trade: this exchange moves raw token
+    # rows without map-side combine, but tf is ≈1 for almost all
+    # (conv, token) pairs, so the combined and raw volumes are nearly
+    # identical.
+    return tokens.repartition("conv_id").groupBy("conv_id", "token").agg(*aggs)
+
+
+def conv_tokens(tokens: DataFrame) -> DataFrame:
+    """(conv_id, token), one row per pair — what df and the postings
+    count. A raw stream pays a distinct; a :func:`token_counts` frame is
+    already unique on (conv_id, token) and is only projected."""
+    pairs = tokens.select("conv_id", "token")
+    return pairs if "tf_raw" in tokens.columns else pairs.distinct()
+
+
 def document_frequency(tokens: DataFrame) -> DataFrame:
-    """(token, df) — number of distinct conversations containing token."""
-    return (
-        tokens.select("conv_id", "token")
-        .distinct()
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    """(token, df) — number of distinct conversations containing token.
+    ``tokens`` is the raw stream or its :func:`token_counts`."""
+    return conv_tokens(tokens).groupBy("token").agg(F.count(F.lit(1)).alias("df"))
 
 
 def idf_table(
@@ -57,6 +89,8 @@ def tfidf_vectors(
 ) -> DataFrame:
     """(conv_id, vec map<string,double>, norm double, n_tokens int).
 
+    ``tokens`` is the raw stream or its :func:`token_counts`.
+
     Weight = tf · idf with tf = count/doc_len (cfg.use_tf), or idf-only
     (reference parity: the reference never computes true TF — SURVEY §2.4
     A6, /root/reference/core/similarity.go:494). ``norm`` is the L2 norm,
@@ -68,26 +102,13 @@ def tfidf_vectors(
     If ``tokens`` carries a ``boost`` column (structure-aware mode,
     operators/structure.boost_weights — the reference's C14: weight =
     idf·boost, /root/reference/core/similarity.go:494,513-516), the
-    weight is further multiplied by it. The boost is constant per
-    (conv_id, token) so max() under the groupBy is exact.
+    weight is further multiplied by it.
     """
     cfg = cfg or PipelineConfig()
     has_boost = "boost" in tokens.columns
-    aggs = [F.count(F.lit(1)).alias("tf_raw")]
-    if has_boost:
-        aggs.append(F.max("boost").alias("boost"))
-    # ONE shuffle for the whole stage: hash-partitioning by conv_id
-    # satisfies the clustering requirements of every downstream operator
-    # — the (conv_id, token) aggregate (conv_id is a subset of its keys),
-    # the doc_len window, and the final per-conversation map build — so
-    # Catalyst plans a single exchange and fuses the rest partition-
-    # local. Without it the token stream (the largest intermediate at
-    # production scale: ~10² tokens per turn) shuffles twice: once on
-    # (conv_id, token) for the count, once on conv_id for the window.
-    # The trade: this exchange moves raw token rows without map-side
-    # combine, but tf is ≈1 for almost all (conv, token) pairs, so the
-    # combined and raw volumes are nearly identical.
-    counts = tokens.repartition("conv_id").groupBy("conv_id", "token").agg(*aggs)
+    # A materialized counts frame has lost its conv_id partitioning, so
+    # the doc_len window below still plans one exchange over the counts.
+    counts = tokens if "tf_raw" in tokens.columns else token_counts(tokens)
     # The IDF broadcast is a north-rule mandate ("broadcast of the IDF
     # dictionary"). Its size is O(vocab) — bounded in practice by the
     # token pattern (words, not ids) and by min-df pruning upstream; on a

@@ -15,8 +15,15 @@ reference's Bloom fast path, generalized): at 10^12 turns with heavy exact
 duplication this cuts the quadratic stage's input before anything
 expensive runs. Exact-dup edges re-enter at the clustering stage.
 
+The tokenize stage explodes the representatives' token stream (~200×
+their row count) ONCE and collapses it to (conv_id, token, tf_raw)
+counts (operators/tfidf.token_counts), materialized eagerly — durable
+under a Checkpointer, so a resumed run reads the counts back instead of
+re-exploding. idf, vectors and postings all read the counts; only the
+coord-density scorer reads the raw stream (it needs token positions).
+
 Driver-constant control (round 4): the DAG has two independent branches
-after tokenization — tokens → vectors and tokens → idf → postings →
+after tokenization — counts → vectors and counts → idf → postings →
 candidate pairs — that only re-join at scoring. Whenever both run, they
 are submitted from two driver threads, so their per-stage driver
 constants (Catalyst/AQE planning, scheduling — the Amdahl term the N→4N
@@ -40,7 +47,7 @@ from ..operators.canonicalize import canonicalize
 from ..operators.clustering import assign_entities, connected_components
 from ..operators.dedup import dedup_exact, exact_dup_edges
 from ..operators.scoring import score_pairs, top_k_matches
-from ..operators.tfidf import idf_table, tfidf_vectors
+from ..operators.tfidf import idf_table, tfidf_vectors, token_counts
 
 #: execution order of the named stages ``until`` can stop at
 STAGE_ORDER = (
@@ -227,13 +234,14 @@ def run_pipeline(
     if checkpointer is None and cfg.materialize_tokens:
         # Opt-in only (cfg.materialize_tokens): checkpointing the ~200×
         # exploded stream is a bandwidth-bound block write that no core
-        # count speeds up — the default recomputes the cheap explode
-        # inside each consumer's map side instead (idf's distinct,
-        # vectors' conv_id repartition, postings' distinct all open with
-        # a shuffle, so the explode fuses into tasks that already run).
-        # Each consumer still plans against a LogicalRDD — reps, one
-        # narrow projection below it.
+        # count speeds up. By default the explode fuses into the map side
+        # of the counts' conv_id shuffle below, and only coord-density
+        # scoring re-runs it.
         tokens = materialize(tokens, cfg, eager=True)
+    # The one pass over the raw stream: every downstream token consumer
+    # (idf, vectors, postings) reads these counts, which are unique on
+    # (conv_id, token), so none of them re-explodes or re-distincts.
+    counts = ckpt("tokenize", lambda: token_counts(tokens))
     n_docs = fut_ndocs.result() if parallel else reps.count()
     stage_sec["tokenize"] = round(time.monotonic() - t_tok, 3)
     if not want("idf"):
@@ -245,17 +253,17 @@ def run_pipeline(
     # the cheaper lazy persist (one consumer fills it for the next).
     idf = fields["idf"] = ckpt(
         "idf",
-        lambda: idf_table(tokens, n_docs, cfg),
+        lambda: idf_table(counts, n_docs, cfg),
         mode="eager" if parallel else "lazy",
     )
     if not want("vectors"):
         return result()
 
     if not parallel:  # until is "vectors" or "postings"
-        fields["vectors"] = ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+        fields["vectors"] = ckpt("vectors", lambda: tfidf_vectors(counts, idf, cfg))
         if want("postings"):
             fields["postings"] = ckpt(
-                "postings", lambda: postings(tokens, idf, cfg), mode="none"
+                "postings", lambda: postings(counts, idf, cfg), mode="none"
             )
         return result()
 
@@ -265,11 +273,11 @@ def run_pipeline(
         # distinct FAIR pools so neither branch's stages queue behind
         # the other's under the session-wide scheduler (session.py)
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "branch-vectors")
-        return ckpt("vectors", lambda: tfidf_vectors(tokens, idf, cfg))
+        return ckpt("vectors", lambda: tfidf_vectors(counts, idf, cfg))
 
     def pair_branch() -> tuple[DataFrame, DataFrame]:
         spark.sparkContext.setLocalProperty("spark.scheduler.pool", "branch-pairs")
-        p = ckpt("postings", lambda: postings(tokens, idf, cfg), mode="none")
+        p = ckpt("postings", lambda: postings(counts, idf, cfg), mode="none")
         return p, ckpt("candidate_pairs", lambda: candidate_pairs(p, cfg))
 
     fut_vec = pool.submit(vec_branch)

@@ -256,8 +256,9 @@ def _await_calm_window(
 
 
 def run_er_scoring_timed(spark) -> dict:
-    """Build the pipeline front-half (canonicalize → pairs) UNTIMED, then
-    time the compute back-half: pair scoring + JW + edge build + connected
+    """Run the shipped pipeline's front half UNTIMED
+    (``run_pipeline(until="candidate_pairs")``), then time the compute
+    back-half: pair scoring + JW + edge build + connected
     components + assignment.
 
     This is the stage-scaling probe: at production scale (10^12 turns) the
@@ -268,40 +269,27 @@ def run_er_scoring_timed(spark) -> dict:
     the same parallelism.
     """
     from address_match_recommend_spark.config import PipelineConfig
-    from address_match_recommend_spark.functions.tokenize import explode_tokens
-    from address_match_recommend_spark.operators.blocking import (
-        candidate_pairs,
-        postings,
-    )
-    from address_match_recommend_spark.operators.canonicalize import canonicalize
     from address_match_recommend_spark.operators.clustering import (
         assign_entities,
         connected_components,
     )
-    from address_match_recommend_spark.operators.dedup import (
-        dedup_exact,
-        exact_dup_edges,
-    )
     from address_match_recommend_spark.operators.scoring import score_pairs
-    from address_match_recommend_spark.operators.tfidf import idf_table, tfidf_vectors
+    from address_match_recommend_spark.plans.pipeline import run_pipeline
     from pyspark.sql import functions as F
 
     corpus_dir = os.environ["SPARK_GRAFT_ER_CORPUS"]
     tr = spark.read.parquet(f"{corpus_dir}/transcripts.parquet")
     cfg = PipelineConfig()
-    # localCheckpoint (not persist): the timed back-half plans against
+    # the shipped plan's front half: every returned stage is materialized
+    # with its lineage cut, so the timed back-half plans against
     # LogicalRDDs instead of re-planning the whole front-half DAG on
     # every action — driver-side planning is constant in cluster size and
     # was the dominant serial fraction in the round-2 scaling probe
-    conv = canonicalize(tr).localCheckpoint()
-    reps = dedup_exact(conv).localCheckpoint()
-    n = reps.count()
-    tokens = explode_tokens(reps, cfg).localCheckpoint()
-    idf = idf_table(tokens, n, cfg).localCheckpoint()
-    vec = tfidf_vectors(tokens, idf, cfg).localCheckpoint()
-    pairs = candidate_pairs(postings(tokens, idf, cfg), cfg).localCheckpoint()
+    front = run_pipeline(tr, cfg, until="candidate_pairs")
+    conv, reps = front.conversations, front.representatives
+    vec, pairs = front.vectors, front.pairs
     n_pairs = pairs.count()
-    dup_edges = exact_dup_edges(conv).localCheckpoint()
+    dup_edges = front.dup_edges.localCheckpoint()
     # warm the Python workers so their spin-up isn't in the timed region
     from address_match_recommend_spark.functions.jaro_winkler import make_jw_udf
 

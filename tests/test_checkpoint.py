@@ -11,6 +11,7 @@ from address_match_recommend_spark.sources.checkpoint import Checkpointer
 STAGES = [
     "conversations",
     "representatives",
+    "tokenize",
     "idf",
     "vectors",
     "postings",
@@ -36,7 +37,8 @@ def test_checkpointed_pipeline_and_resume(spark, tiny_tables, tmp_path):
     # DAG constraints instead of one serialized order.
     assert sorted(ck1.stages_run) == sorted(STAGES)
     ran = {s: i for i, s in enumerate(ck1.stages_run)}
-    assert ran["conversations"] < ran["representatives"] < ran["idf"]
+    assert ran["conversations"] < ran["representatives"] < ran["tokenize"]
+    assert ran["tokenize"] < ran["idf"]
     assert ran["idf"] < ran["vectors"]
     assert ran["postings"] < ran["candidate_pairs"] < ran["scored_pairs"]
     assert ran["vectors"] < ran["scored_pairs"]
@@ -98,6 +100,8 @@ def test_invalidate_cascades_downstream(spark, tiny_tables, tmp_path):
     i = STAGES.index("idf")
     assert sorted(ck2.stages_run) == sorted(STAGES[i:])
     assert set(ck2.stages_resumed) == set(STAGES[:i])
+    # the token counts are read back, not re-exploded
+    assert "tokenize" in ck2.stages_resumed and "tokenize" not in ck2.stages_run
     assert res.clusters.count() > 0
 
 

@@ -2,6 +2,7 @@
 (reference test style 1 — assertion goldens, SURVEY §5)."""
 
 import math
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,10 +13,12 @@ from address_match_recommend_spark.functions.tokenize import (
     make_tokenize_udf,
     tokenize_col,
 )
+from address_match_recommend_spark.operators.blocking import postings
 from address_match_recommend_spark.operators.tfidf import (
     document_frequency,
     idf_table,
     tfidf_vectors,
+    token_counts,
 )
 
 
@@ -99,3 +102,84 @@ def test_broadcast_idf_flag_identical_vectors(spark, mini):
     # the hint is really gone: only the flag-on logical plan carries it
     assert "hint" in on._jdf.queryExecution().logical().toString().lower()
     assert "hint" not in off._jdf.queryExecution().logical().toString().lower()
+
+
+@pytest.fixture(scope="module")
+def reps(spark, tiny_tables):
+    from address_match_recommend_spark.operators.canonicalize import canonicalize
+    from address_match_recommend_spark.operators.dedup import dedup_exact
+
+    return dedup_exact(canonicalize(tiny_tables["transcripts"])).localCheckpoint()
+
+
+def _stream(reps, variant: str):
+    """The token stream as run_pipeline builds it: text tokens, hashed
+    int64 tokens, or structure-aware tokens carrying a ``boost`` column."""
+    cfg = PipelineConfig(use_structure=variant == "boost")
+    if variant == "boost":
+        from address_match_recommend_spark.operators.structure import (
+            boost_weights,
+            tokens_with_structure,
+        )
+
+        return cfg, boost_weights(tokens_with_structure(reps, cfg))
+    tokens = explode_tokens(reps, cfg)
+    if variant == "hashed":
+        tokens = tokens.withColumn("token", F.xxhash64("token"))
+    return cfg, tokens
+
+
+@pytest.mark.parametrize("variant", ["text", "hashed", "boost"])
+def test_token_counts_input_equals_raw_stream(spark, reps, variant):
+    """idf, vectors and postings read the pipeline's materialized
+    token_counts frame; each must equal its raw-stream result."""
+    cfg, tokens = _stream(reps, variant)
+    counts = token_counts(tokens).localCheckpoint()
+    assert ("boost" in counts.columns) == (variant == "boost")
+    n = reps.count()
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    assert rows(document_frequency(counts)) == rows(document_frequency(tokens))
+    idf = idf_table(tokens, n, cfg).localCheckpoint()
+    assert rows(idf_table(counts, n, cfg)) == rows(idf)
+
+    def vecs(df):
+        return {r["conv_id"]: r for r in df.collect()}
+
+    got, want = vecs(tfidf_vectors(counts, idf, cfg)), vecs(tfidf_vectors(tokens, idf, cfg))
+    assert got.keys() == want.keys() and len(got) == n
+    for cid, r in want.items():
+        assert got[cid]["vec"] == r["vec"]
+        assert got[cid]["n_tokens"] == r["n_tokens"]
+        # the L2 sum may add the same weights in another order
+        assert got[cid]["norm"] == pytest.approx(r["norm"], rel=1e-12)
+
+    # a small budget makes the per-conversation window cut; ``clamped``
+    # (the incremental path's idf) adds its tie-break to that window
+    pcfg = PipelineConfig(max_block_tokens_per_conv=3, max_block_df=n)
+    clamped = idf.withColumn("clamped", F.col("df") == 2)
+    for table in (idf, clamped):
+        want_post = rows(postings(tokens, table, pcfg))
+        assert want_post and rows(postings(counts, table, pcfg)) == want_post
+
+
+def test_token_counts_consumers_skip_explode_and_distinct(spark, reps):
+    """Over a materialized token_counts frame, the executed idf and
+    postings plans hold no explode (Generate) and no distinct (a
+    HashAggregate with no aggregate functions)."""
+    cfg = PipelineConfig()
+    tokens = explode_tokens(reps, cfg)
+    counts = token_counts(tokens).localCheckpoint()
+    distinct = re.compile(r"HashAggregate\(keys=\[[^\]]*\], functions=\[\]")
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    raw = plan(postings(tokens, idf_table(tokens, 10, cfg), cfg))
+    assert "Generate" in raw and distinct.search(raw)  # the shapes it skips
+    idf = idf_table(counts, reps.count(), cfg)
+    for df in (idf, postings(counts, idf, cfg)):
+        p = plan(df)
+        assert "Generate" not in p and not distinct.search(p), p
