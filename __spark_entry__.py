@@ -590,9 +590,24 @@ FROM common
 # ---------------------------------------------------------------------------
 
 
-def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from address_match_recommend_spark.operators.ann import cosine_sim
+def _norm(col):
+    return F.sqrt(
+        F.aggregate(col, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x)
+    )
 
+
+def cosine_sim(a, b):
+    """Column: cosine between two array<float/double> columns."""
+    dot = F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+    denom = _norm(a) * _norm(b)
+    return F.when(denom > 0, dot / denom).otherwise(F.lit(0.0))
+
+
+def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")

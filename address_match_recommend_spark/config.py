@@ -130,6 +130,7 @@ class PipelineConfig:
     jw_prefix_chars: int = 512
 
     # --- clustering ---
+    #: cap on the distributed loop; reaching it unconverged raises
     max_cc_iterations: int = 20
     #: edge sets at or below this size skip the distributed large/small-
     #: star loop and run driver-side union-find (the broadcast-join

@@ -4,10 +4,9 @@ reference's gse segmenter (/root/reference/segment/gse_segment.go:11-25) and
 SimpleSegmenter fallback (/root/reference/segment/simple_segment.go:11-47).
 
 The default path is **JVM-side** (``regexp_extract_all`` inside whole-stage
-codegen — faster than any Python UDF); a vectorized pandas-UDF variant
-exists for tokenizers that genuinely need Python (custom dictionaries,
-CJK segmentation), per the input_hint's "vectorized pandas/Arrow UDFs, no
-per-row Python".
+codegen — faster than any Python UDF); the dictionary segmenter, which
+genuinely needs Python, is a vectorized Arrow pandas UDF (no per-row
+Python).
 """
 
 from __future__ import annotations
@@ -125,34 +124,3 @@ def make_dict_tokenize_udf(spark, cfg: PipelineConfig | None = None):
             yield s.fillna("").map(segment)
 
     return dict_tokenize_udf
-
-
-def make_tokenize_udf(cfg: PipelineConfig | None = None):
-    """Arrow-vectorized pandas UDF tokenizer (the Python slow path).
-
-    Only needed when tokenization requires Python (e.g. a broadcast
-    dictionary segmenter like the reference's gse/jieba); the default
-    pipeline uses :func:`tokenize_col`.
-    """
-    import re
-
-    cfg = cfg or PipelineConfig()
-    pattern = re.compile(cfg.token_pattern)
-    stop = set(cfg.stopwords)
-    min_len = cfg.min_token_len
-    lower = cfg.lowercase
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def tokenize_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            src = s.fillna("")
-            if lower:
-                src = src.str.lower()
-            out = src.map(
-                lambda x: [
-                    t for t in pattern.findall(x) if len(t) >= min_len and t not in stop
-                ]
-            )
-            yield out
-
-    return tokenize_udf

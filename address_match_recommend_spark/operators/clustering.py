@@ -9,7 +9,9 @@ expressed as a driver loop of DataFrame jobs. Catalyst cannot express
 iteration, so the loop lives in Python; each iteration checkpoints to cut
 lineage (otherwise the plan grows exponentially) and convergence is
 detected by an order-insensitive (count, hash-sum) signature of the edge
-set — two tiny aggregates, no collect of data rows.
+set — two tiny aggregates, no collect of data rows. A loop that reaches
+``cfg.max_cc_iterations`` unconverged raises instead of returning a
+partial clustering.
 
 Entity id = lexicographic min conv_id of the component (matches the
 expected_clusters fixture convention).
@@ -195,6 +197,12 @@ def connected_components(
             if sig == prev_sig:
                 break
             prev_sig = sig
+        else:
+            raise RuntimeError(
+                f"connected_components did not converge within "
+                f"max_cc_iterations={cfg.max_cc_iterations} "
+                f"({n_edges} input edges)"
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_conf)
 

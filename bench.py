@@ -10,15 +10,9 @@ driver-contract queries over the /root/testdata tables.
 
 Scaling-efficiency evidence (north rule, sandbox proxy for N vs 4N
 executors): `python bench.py --scaling` / `--stage-scaling` runs the same
-job on the same pre-generated input at local[N] and local[4N] in fresh
-JVMs. Core-pair choice (this VM: 32 hyperthreads = 16 physical cores;
-pure-CPU calibration of the pair ceilings):
-
-| pair | ceiling | note |
-|---|---|---|
-| 8→32 | 0.74  | crosses into SMT — unusable for a 0.8 gate |
-| 4→16 | 0.896 | fills all physical cores at the top level |
-| 2→8  | ~0.95 | both levels fully within physical cores (default) |
+job on the same pre-generated input at local[N] and local[M] in fresh
+JVMs; the pair defaults to (max(1, host_cores() // 4), host_cores()),
+overridden by `--cores=N,M`.
 
 Interleaved repeats + min per level defend against the VM's bursty
 external CPU throttling; every run stamps loadavg + a before/after CPU
@@ -148,40 +142,6 @@ def _loadavg1() -> float:
         return -1.0
 
 
-def _settle_before_epoch(limit: float = 1.0, cap_s: int = 240) -> float:
-    """Wait (bounded) for the 1-min loadavg to decay below ``limit``
-    before launching a scaling epoch. The interleaved epochs run
-    back-to-back, so each fresh JVM otherwise launches into the residual
-    load of the previous epoch's 32-thread teardown — the r4 50k
-    recording's best 8-core epoch launched at loadavg 2.36, ABOVE the
-    recording-start guard's own 2.0 threshold. Capped so a recording can
-    never hang on a noisy host; returns the loadavg actually seen at
-    launch (the child stamps it again in its own JSON)."""
-    import time
-
-    waited = 0
-    load = _loadavg1()
-    while load > limit and waited < cap_s:
-        time.sleep(10)
-        waited += 10
-        load = _loadavg1()
-    return load
-
-
-def _refuse_if_loaded(context: str) -> None:
-    """Refuse to start a scaling recording on a busy machine (override
-    with SPARK_GRAFT_IGNORE_LOAD=1). The per-round driver bench is only
-    stamped, never refused — a refusal there would drop the round's
-    BENCH artifact entirely."""
-    load = _loadavg1()
-    if load > 2.0 and os.environ.get("SPARK_GRAFT_IGNORE_LOAD") != "1":
-        sys.exit(
-            f"{context}: 1-min loadavg {load} > 2.0 — another workload is "
-            "running; a scaling recording now would be contaminated. "
-            "Wait for idle or set SPARK_GRAFT_IGNORE_LOAD=1."
-        )
-
-
 def _cpu_calibration(seconds: float = 2.0) -> float:
     """Single-core busy-loop iterations/sec measured in-process. The
     sandbox host throttles guest CPU in bursts (same stage measured 2-4×
@@ -193,66 +153,6 @@ def _cpu_calibration(seconds: float = 2.0) -> float:
     while time.monotonic() - t0 < seconds:
         n += 1
     return n / seconds
-
-
-def _wide_parity(k: int = 8, seconds: float = 2.0) -> dict:
-    """k-wide concurrency probe (round 5, VERDICT r4 next #7): the same
-    busy loop as ``_cpu_calibration`` run in k CONCURRENT processes;
-    ``parity`` = mean per-process iter/s under k-wide load / the solo
-    rate. The sandbox host sometimes delivers ~17% less per core under
-    sustained 8-wide load (BENCH/BASELINE.md, r4 0.619 postmortem),
-    hard-capping any 2→8 scaling ratio at ~0.83 that day regardless of
-    engine — this stamp lets every bench artifact carry the wide-load
-    ceiling alongside the single-thread calibration."""
-    import multiprocessing as mp
-
-    solo = _cpu_calibration(seconds)
-
-    def worker(q):
-        q.put(_cpu_calibration(seconds))
-
-    q: "mp.Queue" = mp.Queue()
-    procs = [mp.Process(target=worker, args=(q,)) for _ in range(k)]
-    for p in procs:
-        p.start()
-    rates = [q.get() for _ in range(k)]
-    for p in procs:
-        p.join()
-    wide = sum(rates) / k
-    return {
-        "k": k,
-        "solo_ips": round(solo),
-        "wide_ips_mean": round(wide),
-        "parity": round(wide / solo, 3) if solo else 0.0,
-    }
-
-
-def _await_calm_window(
-    min_parity: float = 0.95,
-    min_calib: float = 6.5e6,
-    cap_s: int = 900,
-    poll_s: int = 60,
-) -> dict:
-    """Block (bounded) until the host shows BOTH a calm single-thread
-    calibration (≥ min_calib iter/s) and near-unity 8-wide per-core
-    parity (≥ min_parity) — the launch gate for scaling recordings
-    (VERDICT r4 next #2: the honest whole-job recordings kept absorbing
-    a host day-ceiling the gate now removes at LAUNCH, not in the
-    reporting). Returns the full probe log either way; ``calm`` says
-    whether the gate was met — a caller that never sees a calm window
-    commits the log as the recording's negative result."""
-    t0 = time.monotonic()
-    probes = []
-    while True:
-        p = _wide_parity()
-        p["t_offset_s"] = round(time.monotonic() - t0, 1)
-        p["loadavg"] = _loadavg1()
-        probes.append(p)
-        if p["solo_ips"] >= min_calib and p["parity"] >= min_parity:
-            return {"calm": True, "probes": probes}
-        if time.monotonic() - t0 >= cap_s:
-            return {"calm": False, "probes": probes}
-        time.sleep(poll_s)
 
 
 def run_er_scoring_timed(spark) -> dict:
@@ -341,10 +241,6 @@ def main(er_only: bool = False, score_only: bool = False) -> None:
     import __spark_entry__ as entrymod
 
     sf_name = os.path.basename(SF_DIR.rstrip("/"))
-    # health banner BEFORE the JVM exists: solo calibration + 8-wide
-    # per-core parity, so every artifact records the host's wide-load
-    # ceiling (a 0.83-parity day caps any 2→8 ratio at ~0.83 engine-free)
-    wide_probe = _wide_parity()
     spark = get_spark(app_name=f"bench-{sf_name}", cores=CPUS)
 
     load_start = _loadavg1()
@@ -368,8 +264,6 @@ def main(er_only: bool = False, score_only: bool = False) -> None:
             "calib_before": r["calib_before"],
             "calib_after": r["calib_after"],
             "loadavg_start": load_start,
-            "wide_parity_8": wide_probe["parity"],
-            "wide_probe": wide_probe,
         }))
         spark.stop()
         return
@@ -408,20 +302,17 @@ def main(er_only: bool = False, score_only: bool = False) -> None:
         "loadavg_end": _loadavg1(),
         "calib_start": calib_start,
         "calib_end": round(_cpu_calibration()),
-        "wide_parity_8": wide_probe["parity"],
-        "wide_probe": wide_probe,
     }
     print(json.dumps(out))
     spark.stop()
 
 
 def scaling(n_entities: int = 1200, repeats: int = 2, stage: bool = False,
-            cores_pair: tuple[int, int] = (2, 8),
-            calm_gate: bool = False) -> None:
+            cores_pair: tuple[int, int] | None = None) -> None:
     """Scaling-efficiency evidence (north rule, sandbox proxy for N vs 4N
     executors): the SAME job on the SAME pre-generated input at local[N]
-    and local[4N] (default 2 vs 8 — see module docstring for the
-    core-pair ceiling table), fresh JVM each.
+    and local[M] (default: a quarter of the host's cores vs all of them),
+    fresh JVM each.
 
     The sandbox VM's CPU throughput is externally throttled in bursts
     (identical stages measured 30 s vs 85 s minutes apart), so runs are
@@ -435,47 +326,19 @@ def scaling(n_entities: int = 1200, repeats: int = 2, stage: bool = False,
     cluster scaling; the back-half probe is the faithful proxy. Both
     numbers are reported in BENCH/BASELINE.md.
 
-    efficiency = (throughput_4N / throughput_N) / 4 = (T_N / T_4N) / 4.
+    efficiency = (throughput_M / throughput_N) / (M / N) = (T_N / T_M) / (M / N).
     """
     import subprocess
 
-    _refuse_if_loaded("scaling")
-    # Launch gate (round 5, --calm-gate): the whole-job proxy conflates
-    # engine scaling with the host's wide-load day-ceiling — recordings
-    # launched on a 0.83-parity day can never clear 0.8 regardless of
-    # engine. Gate the LAUNCH (never the reporting): require one calm
-    # window (solo calib ≥ 6.5M AND 8-wide parity ≥ 0.95) before the
-    # first epoch, re-probe before every epoch, and carry every probe in
-    # the output verbatim. If the host never goes calm within the cap,
-    # the probe log IS the (negative) result — print it and stop rather
-    # than record a contaminated row.
-    gate_log: dict | None = None
-    if calm_gate:
-        gate_log = _await_calm_window()
-        if not gate_log["calm"]:
-            print(json.dumps({
-                "scaling": None,
-                "calm_gate": gate_log,
-                "note": "no calm window within cap — recording not launched",
-            }))
-            return
     corpus_dir = ensure_corpus_parquet(
         n_entities, f"/tmp/amr_scaling_corpus_{n_entities}"
     )
     mode_flag = "--score-only" if stage else "--er-only"
     metric_key = "er_scoring_stage" if stage else "er_pipeline"
-    lo, hi = cores_pair
+    lo, hi = cores_pair or (max(1, CPUS // 4), CPUS)
     runs: dict[int, list] = {lo: [], hi: []}
-    epoch_probes: list[dict] = []
     order = [lo, hi] * repeats  # interleaved: each level samples every epoch
     for cores in order:
-        _settle_before_epoch()
-        if calm_gate:
-            # short re-probe per epoch (bounded — an epoch launched into
-            # a burst is visible in the log, the recording still runs)
-            ep = _await_calm_window(cap_s=240, poll_s=30)
-            ep["cores"] = cores
-            epoch_probes.append(ep)
         env = dict(
             os.environ,
             SPARK_GRAFT_CPUS=str(cores),
@@ -504,9 +367,9 @@ def scaling(n_entities: int = 1200, repeats: int = 2, stage: bool = False,
         line = [l for l in proc.stdout.splitlines() if l.startswith("{")][-1]
         runs[cores].append(json.loads(line))
     results = {c: min(rs, key=lambda r: r["value"]) for c, rs in runs.items()}
-    r8, r32 = results[lo], results[hi]
-    t8, t32 = r8["queries"][metric_key], r32["queries"][metric_key]
-    eff = (t8 / t32) / (hi / lo) if t32 else 0.0
+    r_lo, r_hi = results[lo], results[hi]
+    t_lo, t_hi = r_lo["queries"][metric_key], r_hi["queries"][metric_key]
+    eff = (t_lo / t_hi) / (hi / lo) if t_hi else 0.0
     # Min-stage composite (whole-job mode): per level, take each stage's
     # MIN across the interleaved epochs and sum. The host throttles CPU
     # in multi-minute bursts that hit DIFFERENT stages in different
@@ -532,16 +395,13 @@ def scaling(n_entities: int = 1200, repeats: int = 2, stage: bool = False,
             "mode": "scoring_stage" if stage else "whole_job",
             "cores": [lo, hi],
             "n_entities": n_entities,
-            "sec": [t8, t32],
-            "er_pairs_per_sec": [r8["er_pairs_per_sec"], r32["er_pairs_per_sec"]],
+            "sec": [t_lo, t_hi],
+            "er_pairs_per_sec": [r_lo["er_pairs_per_sec"], r_hi["er_pairs_per_sec"]],
             "efficiency": round(eff, 3),
             "stage_min_composite_sec": composite or None,
             "efficiency_stage_composite": eff_comp,
             "all_runs_sec": {str(c): [r["value"] for r in rs] for c, rs in runs.items()},
         },
-        "calm_gate": (
-            {"launch": gate_log, "per_epoch": epoch_probes} if calm_gate else None
-        ),
         "runs": {str(k): v for k, v in results.items()},
     }))
 
@@ -552,11 +412,10 @@ if __name__ == "__main__":
     reps = [a for a in sys.argv if a.startswith("--repeats=")]
     n_reps = int(reps[0].split("=")[1]) if reps else 2
     cp = [a for a in sys.argv if a.startswith("--cores=")]
-    pair = tuple(int(x) for x in cp[0].split("=")[1].split(",")) if cp else (2, 8)
-    calm = "--calm-gate" in sys.argv
+    pair = tuple(int(x) for x in cp[0].split("=")[1].split(",")) if cp else None
     if "--stage-scaling" in sys.argv:
-        scaling(n_ents, n_reps, stage=True, cores_pair=pair, calm_gate=calm)
+        scaling(n_ents, n_reps, stage=True, cores_pair=pair)
     elif "--scaling" in sys.argv:
-        scaling(n_ents, n_reps, cores_pair=pair, calm_gate=calm)
+        scaling(n_ents, n_reps, cores_pair=pair)
     else:
         main(er_only="--er-only" in sys.argv, score_only="--score-only" in sys.argv)

@@ -6,7 +6,8 @@ values stringified). Usage:
 
     python scripts/check_oracles.py [sf_dir] [query ...]
 
-Defaults: /root/testdata/sf0.01, all queries with an oracle.
+Defaults: /root/testdata/sf0.01, all queries with an oracle. Exits 1
+if any query fails or mismatches its oracle.
 """
 
 from __future__ import annotations
@@ -86,6 +87,8 @@ def main() -> None:
                r.get(k) for k in ("rows_match", "schema_match", "hash_match"))]
     print("FAILED:" if bad else "ALL OK", bad)
     spark.stop()
+    if bad:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

@@ -1,15 +1,13 @@
 """Aggregate memory-STREAMING bandwidth at k concurrent processes.
 
-Companion to bench.py's 8-wide parity probe, which runs a cache-resident
-busy loop and answers "does CPU throughput scale k-wide?" (it does:
-parity 0.95+ on calm days). This probe answers the question that one
-cannot: does MEMORY bandwidth scale k-wide? Each worker streams a
-256 MiB numpy copy (far past LLC) in a loop; the aggregate GB/s at
-k = 1, 2, 8 maps directly onto the pipeline's byte-heavy stages — the
-token-stream shuffles (idf's distinct, vectors' conv_id repartition,
-candidate_pairs' distinct) move GBs through /dev/shm and the page
-cache, so their 2→8-core scaling is bounded by THIS curve, not by the
-CPU parity probe's.
+A cache-resident busy loop answers "does CPU throughput scale k-wide?";
+this probe answers the question that one cannot: does MEMORY bandwidth
+scale k-wide? Each worker streams a 256 MiB numpy copy (far past LLC)
+in a loop; the aggregate GB/s at k = 1, 2, 8 maps directly onto the
+pipeline's byte-heavy stages — the token-stream shuffles (idf's
+distinct, vectors' conv_id repartition, candidate_pairs' distinct) move
+GBs through /dev/shm and the page cache, so their 2→8-core scaling is
+bounded by THIS curve, not by CPU throughput.
 
 Usage: python scripts/membw_probe.py [seconds_per_level]
 Prints one JSON line: per-level aggregate GB/s and the 2→8 scaling

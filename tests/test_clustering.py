@@ -61,6 +61,15 @@ def test_long_path_converges(spark, cfg):
     assert len(got) == 33
 
 
+def test_unconverged_loop_raises(spark):
+    """Hitting the iteration cap before the edge set stabilises must
+    raise, not return a partial clustering."""
+    nodes = [f"n{i:02d}" for i in range(16)]
+    cfg = PipelineConfig(cc_driver_max_edges=0, max_cc_iterations=2)
+    with pytest.raises(RuntimeError, match=r"max_cc_iterations=2 \(15 input edges\)"):
+        _cc(spark, list(zip(nodes, nodes[1:])), cfg)
+
+
 def test_assign_entities_singletons(spark):
     conv = spark.createDataFrame(
         [("a",), ("b",), ("c",), ("lone",)], "conv_id string"

@@ -6,6 +6,7 @@ same parquet tables, compare row count, column names, and values
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 
@@ -54,3 +55,11 @@ def test_rows_only_queries(spark):
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
+
+
+def test_cosine_sim_identity(spark):
+    df = spark.createDataFrame([(1, [1.0, 0.0], [1.0, 0.0]), (2, [1.0, 0.0], [0.0, 1.0])],
+                               "id int, a array<double>, b array<double>")
+    got = {r["id"]: r["c"] for r in df.select("id", entrymod.cosine_sim(F.col("a"), F.col("b")).alias("c")).collect()}
+    assert got[1] == pytest.approx(1.0)
+    assert got[2] == pytest.approx(0.0)

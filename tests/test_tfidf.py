@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from address_match_recommend_spark.config import PipelineConfig
 from address_match_recommend_spark.functions.tokenize import (
     explode_tokens,
-    make_tokenize_udf,
     tokenize_col,
 )
 from address_match_recommend_spark.operators.blocking import postings
@@ -38,18 +37,6 @@ def test_tokenize_builtin(spark):
     )
     toks = df.select(tokenize_col(F.col("canonical_text")).alias("t")).first()["t"]
     assert toks == ["hello", "world", "run", "42", "x9"]
-
-
-def test_tokenize_udf_matches_builtin(spark, tiny_tables):
-    from address_match_recommend_spark.operators.canonicalize import canonicalize
-
-    conv = canonicalize(tiny_tables["transcripts"]).limit(20)
-    udf = make_tokenize_udf()
-    both = conv.select(
-        tokenize_col(F.col("canonical_text")).alias("a"),
-        udf(F.col("canonical_text")).alias("b"),
-    )
-    assert both.filter(F.col("a") != F.col("b")).count() == 0
 
 
 def test_document_frequency(spark, mini):
