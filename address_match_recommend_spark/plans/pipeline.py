@@ -48,6 +48,7 @@ from ..operators.clustering import assign_entities, connected_components
 from ..operators.dedup import dedup_exact, exact_dup_edges
 from ..operators.scoring import score_pairs, top_k_matches
 from ..operators.tfidf import idf_table, tfidf_vectors, token_counts
+from ..session import codegen_compiles
 
 #: execution order of the named stages ``until`` can stop at
 STAGE_ORDER = (
@@ -106,6 +107,9 @@ def run_pipeline(
     def want(name: str) -> bool:
         return STAGE_ORDER.index(name) <= stop_idx
 
+    spark = transcripts.sparkSession
+    # JVM-wide counter: a concurrent query in the same JVM counts too
+    compiles_at_entry = codegen_compiles(spark)
     stage_sec: dict[str, float] = {}
     fields: dict = {
         k: None
@@ -118,7 +122,12 @@ def run_pipeline(
 
     def result() -> PipelineResult:
         return PipelineResult(
-            metrics={"n_docs": n_docs, "stage_sec": stage_sec}, **fields
+            metrics={
+                "n_docs": n_docs,
+                "stage_sec": stage_sec,
+                "codegen_compiles": codegen_compiles(spark) - compiles_at_entry,
+            },
+            **fields,
         )
 
     def ckpt(name: str, thunk, mode: str = "eager") -> DataFrame:
@@ -266,8 +275,6 @@ def run_pipeline(
                 "postings", lambda: postings(counts, idf, cfg), mode="none"
             )
         return result()
-
-    spark = transcripts.sparkSession
 
     def vec_branch() -> DataFrame:
         # distinct FAIR pools so neither branch's stages queue behind

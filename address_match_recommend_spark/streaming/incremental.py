@@ -105,7 +105,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..plans.incremental import incremental_update
@@ -250,39 +250,44 @@ class StreamingER:
         the base's full ``clusters`` overlaid with every later version's
         ``clusters_delta``, latest version winning per conv_id.
 
-        Shuffle shape: latest-wins is resolved by a window over the
+        Shuffle shape: latest-wins is resolved by an aggregate over the
         DELTAS ONLY (Σ deltas rows — O(affected-since-base), small), and
         the O(corpus) base folds in with one left-anti join against the
         resolved delta ids — broadcastable whenever the delta set fits,
-        i.e. the usual case between refits. Windowing base ∪ deltas
+        i.e. the usual case between refits. Aggregating base ∪ deltas
         together would instead shuffle the full corpus on every state
-        read (once per micro-batch in apply_batch). On an Iceberg/Delta
-        table this overlay is what MERGE INTO maintains in place and
-        the method becomes a plain table read."""
+        read (once per micro-batch in apply_batch).
+
+        Every delta is read in ONE scan and each row's version is parsed
+        from its file path (``…/vNNNNNNNN/clusters_delta/part-…``), so
+        the plan, and the code Spark generates for it, is the same
+        however long the chain: a per-version literal branch would make
+        every micro-batch compile new classes. On an Iceberg/Delta table
+        this overlay is what MERGE INTO maintains in place and the
+        method becomes a plain table read."""
         versions = self._committed_versions()
         base = self._base_of(versions)
         base_df = self.spark.read.parquet(
             f"{self._vdir(base)}/clusters"
         ).select("conv_id", "entity_id")
-        deltas = []
-        for v in versions:
-            p = f"{self._vdir(v)}/clusters_delta"
-            if v > base and os.path.isdir(p):
-                deltas.append(
-                    self.spark.read.parquet(p)
-                    .select("conv_id", "entity_id")
-                    .withColumn("_v", F.lit(v))
-                )
-        if not deltas:
+        paths = [
+            f"{self._vdir(v)}/clusters_delta"
+            for v in versions
+            if v > base and os.path.isdir(f"{self._vdir(v)}/clusters_delta")
+        ]
+        if not paths:
             return base_df
-        allv = deltas[0]
-        for f in deltas[1:]:
-            allv = allv.unionByName(f)
-        w = Window.partitionBy("conv_id").orderBy(F.desc("_v"))
-        latest = (
-            allv.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select("conv_id", "entity_id")
+        deltas = self.spark.read.schema(
+            "conv_id string, entity_id string"
+        ).parquet(*paths).select(
+            "conv_id",
+            "entity_id",
+            F.regexp_extract(
+                "_metadata.file_path", r"/v(\d+)/clusters_delta/[^/]*$", 1
+            ).cast("int").alias("_v"),
+        )
+        latest = deltas.groupBy("conv_id").agg(
+            F.max_by("entity_id", "_v").alias("entity_id")
         )
         return base_df.join(
             latest.select("conv_id"), "conv_id", "left_anti"

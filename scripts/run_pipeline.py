@@ -86,7 +86,7 @@ def main() -> None:
         else None
     )
     cfg = PipelineConfig(
-        shuffle_partitions=args.shuffle_partitions or 32,
+        shuffle_partitions=int(spark.conf.get("spark.sql.shuffle.partitions")),
         reliable_checkpoint=args.reliable,
         checkpoint_dir=args.checkpoint,
     )

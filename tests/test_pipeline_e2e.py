@@ -65,6 +65,15 @@ def test_find_similar_reference_semantics(spark, tiny_tables):
     assert best["cosine"] == pytest.approx(1.0)
 
 
+def test_warm_rerun_compiles_no_codegen(spark, tiny_tables):
+    """Back-to-back runs of the same plan: the second reuses the classes
+    the first compiled (the session's codegen cache holds the pipeline's
+    ~150; under Spark's default of 100 every run recompiled ~140)."""
+    run_pipeline(tiny_tables["transcripts"])
+    res = run_pipeline(tiny_tables["transcripts"])
+    assert res.metrics["codegen_compiles"] <= 10, res.metrics
+
+
 def test_exact_dups_clustered_without_scoring(spark, tiny_tables):
     result = run_pipeline(tiny_tables["transcripts"])
     conv = result.conversations

@@ -1,6 +1,7 @@
 """Session sizing: the driver heap never exceeds the host's memory."""
 
 from address_match_recommend_spark.session import (
+    CODEGEN_CACHE_ENTRIES,
     driver_memory_mb,
     host_cores,
     host_heap_mb,
@@ -35,3 +36,10 @@ def test_get_spark_heap_within_memtotal(spark):
     assert requested * 1024 * 1024 <= mem_bytes
     max_heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     assert max_heap <= mem_bytes
+
+
+def test_codegen_cache_sized_to_engine(spark):
+    """The session keeps the engine's generated classes: Spark's default
+    of 100 entries is smaller than one pipeline run's working set."""
+    conf = spark.sparkContext.getConf().get("spark.sql.codegen.cache.maxEntries")
+    assert int(conf) == CODEGEN_CACHE_ENTRIES

@@ -285,6 +285,33 @@ def test_streaming_er_split_invariance(spark, tmp_path):
     assert partition_of(er_a) == partition_of(er_c)
 
 
+def test_warm_micro_batch_compiles_little(spark, tiny_corpus, tmp_path):
+    """A warm micro-batch reuses the generated code of the ones before
+    it: the state read is one scan whatever the delta chain's length, and
+    the session's codegen cache holds the streaming working set (the
+    third batch here compiled ~415 classes before both held)."""
+    from address_match_recommend_spark.datagen import TRANSCRIPTS_DDL
+    from address_match_recommend_spark.session import codegen_compiles
+    from address_match_recommend_spark.streaming.incremental import StreamingER
+
+    tr, clusters = tiny_corpus.transcripts, tiny_corpus.expected_clusters
+    entities = sorted(clusters["entity_id"].unique())
+    new_convs = sorted(
+        clusters[clusters["entity_id"].isin(set(entities[-3:]))]["conv_id"]
+    )
+    mask = tr["conv_id"].isin(set(new_convs))
+    er = StreamingER(spark, str(tmp_path / "state"))
+    er.bootstrap(spark.createDataFrame(tr[~mask], schema=TRANSCRIPTS_DDL))
+    compiled = []
+    for i in range(3):
+        part = tr[tr["conv_id"].isin(set(new_convs[i::3]))]
+        batch = spark.createDataFrame(part, schema=TRANSCRIPTS_DDL)
+        before = codegen_compiles(spark)
+        er.apply_batch(batch, i)
+        compiled.append(codegen_compiles(spark) - before)
+    assert compiled[2] <= 25, compiled
+
+
 def test_streaming_er_refit(spark, tmp_path):
     """refit() writes a new BASE version (fresh IDF over the full corpus)
     that supersedes prior state; batches applied after it fold against
