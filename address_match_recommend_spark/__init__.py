@@ -18,8 +18,8 @@ Stages (each a checkpointable DataFrame):
    lists) with df-cap + hot-token salting, replacing the reference's
    province-city blocking key (/root/reference/core/similarity.go:658-668)
    (operators/blocking.py)
-5. scoring — batched cosine over TF-IDF maps (JVM-side map_zip_with) +
-   Jaro-Winkler tie-break (operators/scoring.py), the analog of
+5. scoring — cosine over TF-IDF maps + Jaro-Winkler tie-break in one
+   Arrow pass per batch of candidate pairs (operators/scoring.py), the analog of
    computeDocSimilarity (/root/reference/core/similarity.go:432-549)
 6. clustering — iterative large-star/small-star connected components
    (operators/clustering.py), replacing greedy top-N

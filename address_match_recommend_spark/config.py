@@ -47,7 +47,7 @@ class PipelineConfig:
     #: shuffle carries the ~200×-exploded token stream. From that point
     #: the token is a pure join/group key (idf's distinct, vectors'
     #: groupBy + map keys, postings, the pair self-join, the scorer's
-    #: exploded-vector equi-join), so identity is all that matters:
+    #: per-pair id match), so identity is all that matters:
     #: a fixed-width long shuffles, hashes, and compares cheaper than a
     #: variable-length UTF8 string, and at 10^12 turns the token stream's
     #: shuffle payload — the memory-bandwidth/network-bound fraction the

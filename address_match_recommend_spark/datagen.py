@@ -53,6 +53,11 @@ def _zipf_weights(vocab_size: int) -> np.ndarray:
     return w / w.sum()
 
 
+def vocabulary(vocab_size: int = 4000) -> np.ndarray:
+    """The generator's token vocabulary (Zipf rank order)."""
+    return np.array([f"tok{i:05d}" for i in range(vocab_size)])
+
+
 def generate_corpus(
     n_entities: int = 12,
     seed: int = 42,
@@ -73,7 +78,7 @@ def generate_corpus(
     insertions/deletions and role changes.
     """
     rng = np.random.RandomState(seed)
-    vocab = np.array([f"tok{i:05d}" for i in range(vocab_size)])
+    vocab = vocabulary(vocab_size)
     weights = _zipf_weights(vocab_size)
 
     conv_rows: list[tuple] = []  # (conv_id, turn_idx, role, text, tool, ts)

@@ -2,21 +2,17 @@
 
 The reference has no string-distance function (its near-miss handling is
 the road-number boost (1/⁴√(|Δ|+1))·2, /root/reference/core/similarity.go:
-305-316); the north rule adds Jaro-Winkler for borderline pairs. Exposed as
-an Arrow-batched pandas UDF (never row-at-a-time Python) and applied only
-to the borderline cosine band. That band is not small: on the default
-generator it holds most scored pairs (SURVEY §11: 74% at 50k entities),
-so the batch kernel runs in time linear in the prefix length.
+305-316); the north rule adds Jaro-Winkler for borderline pairs. It runs
+a batch at a time (never row-at-a-time Python) inside the pair scorer's
+Arrow pass (operators/scoring.py), on the borderline cosine band only.
+That band is not small: on the default generator it holds most scored
+pairs (SURVEY §11: 74% at 50k entities), so the batch kernel runs in time
+linear in the prefix length.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
@@ -207,20 +203,3 @@ def jaro_winkler_batch(
         prefix = np.zeros(n)
     out[idx] = np.where(has, jaro + prefix * prefix_weight * (1.0 - jaro), 0.0)
     return out
-
-
-def make_jw_udf(prefix_chars: int = 512):
-    """pandas UDF (string, string) → double, comparing only the first
-    ``prefix_chars`` characters (bounds the per-pair cost). Each
-    Arrow batch runs through :func:`jaro_winkler_batch`."""
-
-    @F.pandas_udf(T.DoubleType())
-    def jw_udf(it: Iterator[tuple[pd.Series, pd.Series]]) -> Iterator[pd.Series]:
-        for s1, s2 in it:
-            t1 = s1.fillna("").str.slice(0, prefix_chars)
-            t2 = s2.fillna("").str.slice(0, prefix_chars)
-            yield pd.Series(
-                jaro_winkler_batch(t1.tolist(), t2.tolist()), dtype="float64"
-            )
-
-    return jw_udf

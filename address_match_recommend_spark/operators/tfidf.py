@@ -20,9 +20,10 @@ Scale notes:
   Over the raw stream it is distinct + groupBy — two shuffles.
 - The IDF table is O(vocab) rows — broadcast to executors (north rule:
   "broadcast of the IDF dictionary"), never shuffled against the corpus.
-- TF-IDF vectors are carried as ``map<token,double>`` per conversation so
-  the pair scorer joins once on conv_id instead of re-shuffling exploded
-  tokens per pair.
+- TF-IDF vectors are carried as ``map<token,double>`` per conversation,
+  keys in sorted order (``array_sort`` before ``map_from_entries``), so
+  the pair scorer joins once on conv_id and its Arrow pass receives each
+  side's ``map_keys``/``map_values`` as sorted id runs.
 """
 
 from __future__ import annotations
@@ -94,7 +95,8 @@ def tfidf_vectors(
     Weight = tf · idf with tf = count/doc_len (cfg.use_tf), or idf-only
     (reference parity: the reference never computes true TF — SURVEY §2.4
     A6, /root/reference/core/similarity.go:494). ``norm`` is the L2 norm,
-    precomputed once so the pair scorer's cosine is a pure map-merge.
+    kept for readers of the vectors; the pair scorer recomputes it in id
+    order so its cosine is deterministic.
 
     The idf join is an equi-join against an O(vocab)-row table →
     broadcast hash join (north rule).
@@ -132,7 +134,8 @@ def tfidf_vectors(
         weight = weight * F.col("boost")
     weighted = weighted.withColumn("w", weight.cast("double"))
     return weighted.groupBy("conv_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("token", "w"))).alias("vec"),
+        F.map_from_entries(F.array_sort(F.collect_list(F.struct("token", "w"))))
+        .alias("vec"),
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"),
         F.sum("tf_raw").cast("int").alias("n_tokens"),
     )

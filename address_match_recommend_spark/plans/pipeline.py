@@ -164,9 +164,8 @@ def run_pipeline(
           by the CC loop's checkpoint) — concurrent branches instead get
           ``eager`` for any frame both branches consume.
         - ``pre``    — the thunk already materialized its result
-          (score_pairs persists+counts internally for its
-          confident/borderline split); a second barrier here would pay
-          an extra cached scan + JW pass per run.
+          (score_pairs materializes its one scoring pass); a second
+          barrier here would pay an extra cached scan per run.
         - ``none``   — no persist: exactly one downstream consumer which
           materializes internally (postings is consumed only by
           candidate_pairs, which persists the derived salted frame).
@@ -307,7 +306,7 @@ def run_pipeline(
             cfg,
             tokens=tokens if cfg.use_coord_density else None,
         ),
-        mode="pre",  # score_pairs materializes internally (reps is non-None)
+        mode="pre",  # score_pairs materializes internally
     )
     if not want("edges"):
         return result()

@@ -112,6 +112,7 @@ from ..plans.incremental import incremental_update
 from ..plans.pipeline import run_pipeline
 
 _DELTA_TABLES = ("conversations", "representatives", "postings")
+CLUSTERS_DDL = "conv_id string, entity_id string"
 
 
 class StreamingER:
@@ -270,16 +271,16 @@ class StreamingER:
         base_df = self.spark.read.parquet(
             f"{self._vdir(base)}/clusters"
         ).select("conv_id", "entity_id")
+        # from the base on: a base writes an empty delta, so every read
+        # plans the overlay below, the first after a bootstrap included
         paths = [
             f"{self._vdir(v)}/clusters_delta"
             for v in versions
-            if v > base and os.path.isdir(f"{self._vdir(v)}/clusters_delta")
+            if v >= base and os.path.isdir(f"{self._vdir(v)}/clusters_delta")
         ]
-        if not paths:
+        if not paths:  # a state written before bases carried a delta
             return base_df
-        deltas = self.spark.read.schema(
-            "conv_id string, entity_id string"
-        ).parquet(*paths).select(
+        deltas = self.spark.read.schema(CLUSTERS_DDL).parquet(*paths).select(
             "conv_id",
             "entity_id",
             F.regexp_extract(
@@ -308,14 +309,12 @@ class StreamingER:
                 f"version {version} is not committed under {self.state_dir}"
             )
         vdir = self._vdir(version)
-        for table in ("clusters_delta", "clusters"):
+        for table in ("clusters", "clusters_delta"):
             if os.path.isdir(f"{vdir}/{table}"):
                 return self.spark.read.parquet(f"{vdir}/{table}").select(
                     "conv_id", "entity_id"
                 )
-        return self.spark.createDataFrame(
-            [], "conv_id string, entity_id string"
-        )
+        return self.spark.createDataFrame([], CLUSTERS_DDL)
 
     def vacuum(self) -> list[int]:
         """Delete committed versions strictly before the latest base —
@@ -391,11 +390,17 @@ class StreamingER:
             self.read_clusters().write.mode("overwrite").parquet(
                 f"{vdir}/clusters"
             )
+            self._write_empty_delta(vdir)
             open(os.path.join(vdir, "_BASE"), "w").close()
             self._commit(version)
             return version
 
     # -- lifecycle --------------------------------------------------------
+
+    def _write_empty_delta(self, vdir: str) -> None:
+        # read_clusters then plans one overlay with or without deltas
+        empty = self.spark.createDataFrame([], CLUSTERS_DDL)
+        empty.write.mode("overwrite").parquet(f"{vdir}/clusters_delta")
 
     def _write_base(self, version: int, res) -> None:
         vdir = self._vdir(version)
@@ -406,6 +411,7 @@ class StreamingER:
         res.postings.write.mode("overwrite").parquet(f"{vdir}/postings")
         res.idf.write.mode("overwrite").parquet(f"{vdir}/idf")
         res.clusters.write.mode("overwrite").parquet(f"{vdir}/clusters")
+        self._write_empty_delta(vdir)
         open(os.path.join(vdir, "_BASE"), "w").close()
         self._commit(version)
 

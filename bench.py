@@ -104,12 +104,9 @@ def run_er_pipeline(spark, n_entities: int) -> dict:
         labeled_pairs = tables["labeled_pairs"]
     n_turns = transcripts.count()
 
-    # Warm the Arrow/pandas Python workers (long-lived on a real cluster;
-    # their cold spin-up is session setup, not pipeline throughput)
-    from address_match_recommend_spark.functions.jaro_winkler import make_jw_udf
-    from pyspark.sql import functions as F
-
-    spark.range(64).select(make_jw_udf(8)(F.lit("ab"), F.lit("ac"))).count()
+    # Warm the Arrow Python workers (long-lived on a real cluster; their
+    # cold spin-up is session setup, not pipeline throughput)
+    _warm_python_workers(spark)
 
     t0 = time.monotonic()
     result = run_pipeline(transcripts)
@@ -157,6 +154,18 @@ def _cpu_calibration(seconds: float = 2.0) -> float:
     return n / seconds
 
 
+def _warm_python_workers(spark) -> None:
+    """Start the Arrow Python workers the scorer's pass runs in."""
+    from address_match_recommend_spark.functions.jaro_winkler import jaro_winkler_batch
+
+    def jw(batches):
+        for b in batches:
+            jaro_winkler_batch(["ab"] * b.num_rows, ["ac"] * b.num_rows)
+            yield b
+
+    spark.range(64).mapInArrow(jw, "id long").count()
+
+
 def run_er_scoring_timed(spark) -> dict:
     """Run the shipped pipeline's front half UNTIMED
     (``run_pipeline(until="candidate_pairs")``), then time the compute
@@ -195,9 +204,7 @@ def run_er_scoring_timed(spark) -> dict:
     n_pairs = pairs.count()
     dup_edges = front.dup_edges.localCheckpoint()
     # warm the Python workers so their spin-up isn't in the timed region
-    from address_match_recommend_spark.functions.jaro_winkler import make_jw_udf
-
-    spark.range(64).select(make_jw_udf(8)(F.lit("ab"), F.lit("ac"))).count()
+    _warm_python_workers(spark)
 
     def back_half():
         scored = score_pairs(pairs, vec, reps, cfg)

@@ -65,3 +65,33 @@ def test_coord_density_parity_keeps_strings(spark, transcripts):
         until="vectors",
     )
     assert isinstance(result.vectors.schema["vec"].dataType.keyType, StringType)
+
+
+def _id_collisions(spark, tokens, hash_id) -> int:
+    """Distinct token strings minus distinct ids: 0 iff ``hash_id`` is
+    one-to-one over ``tokens``."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([(t,) for t in tokens], "token string")
+    row = df.agg(
+        F.countDistinct("token").alias("n_tokens"),
+        F.countDistinct(hash_id(F.col("token"))).alias("n_ids"),
+    ).first()
+    return row["n_tokens"] - row["n_ids"]
+
+
+@pytest.mark.parametrize("vocab_size", [4000, 30000])
+def test_xxhash64_ids_do_not_collide_on_generator_vocab(spark, vocab_size):
+    """The scorer treats equal token ids as the same token; over the
+    generator's vocabulary (and typed structure tokens) xxhash64 keeps
+    every token distinct, while a deliberately narrowed hash (mod 2^8)
+    trips the same check."""
+    from pyspark.sql import functions as F
+
+    from address_match_recommend_spark.datagen import vocabulary
+
+    tokens = list(vocabulary(vocab_size)) + [
+        f"{kind}:{v}" for kind in ("role", "tool", "nturns") for v in ("user", "bash", "8")
+    ]
+    assert _id_collisions(spark, tokens, F.xxhash64) == 0
+    assert _id_collisions(spark, tokens, lambda c: F.pmod(F.xxhash64(c), F.lit(256))) > 0

@@ -147,3 +147,149 @@ def test_band_jw_equals_scalar_on_prefixes(spark, tiny_corpus):
     for r in band:
         a, b = text[r["conv_id_a"]], text[r["conv_id_b"]]
         assert r["jw"] == jaro_winkler(a[:p], b[:p]), (r["conv_id_a"], r["conv_id_b"])
+
+
+def test_score_pairs_bit_identical_across_calls(spark, scored_fixture):
+    """Every sum runs in id order, so repeated calls agree bit for bit
+    and an identical pair scores exactly 1.0 (a shuffle-order sum read
+    1.0000000000000002 now and then)."""
+    conv, vectors, pairs = scored_fixture
+    cfg = PipelineConfig(tau_lo=0.0, tau_hi=0.95)
+    runs = [
+        sorted(tuple(r) for r in score_pairs(pairs, vectors, conv, cfg).collect())
+        for _ in range(20)
+    ]
+    assert all(run == runs[0] for run in runs[1:])
+    cos = {(r[0], r[1]): r[2] for r in runs[0]}
+    assert cos[("d1", "d2")] == 1.0
+
+
+def test_scoring_stage_runs_few_jobs(spark, tiny_tables, monkeypatch):
+    """Inside run_pipeline, score_pairs runs at most 5 Spark jobs (the
+    exploded-vector join with a separate JW stage ran 13), counted from
+    the status store's job list around the stage."""
+    from address_match_recommend_spark.plans import pipeline
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def job_ids() -> set[int]:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(spark.sparkContext._gateway.jvm.java.util.ArrayList())
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    seen = {}
+
+    def counted(*args, **kwargs):
+        before = job_ids()
+        out = score_pairs(*args, **kwargs)
+        seen["jobs"] = len(job_ids() - before)
+        return out
+
+    monkeypatch.setattr(pipeline, "score_pairs", counted)
+    res = pipeline.run_pipeline(tiny_tables["transcripts"], PipelineConfig(shuffle_partitions=8))
+    assert res.scored.count() > 0
+    assert 1 <= seen["jobs"] <= 5, seen
+
+
+def _reference_cosines(vec_rows, pairs, nearmiss=None, scale=None):
+    """Plain-Python cosine over collected ``vec`` maps: a dict dot
+    product, optional near-miss term per pair, optional per-pair scale
+    on the text terms (keys not starting role:/tool:/nturns:)."""
+    vec = {r["conv_id"]: dict(r["vec"]) for r in vec_rows}
+    out = {}
+    for a, b in pairs:
+        va, vb = vec[a], vec[b]
+        shared = set(va) & set(vb)
+        if not shared:
+            continue
+        s = (scale or {}).get((a, b), 1.0)
+        dot = sum(
+            va[k] * vb[k] * (1.0 if str(k).startswith(("role:", "tool:", "nturns:")) else s)
+            for k in shared
+        )
+        dot += (nearmiss or {}).get((a, b), 0.0)
+        na = math.sqrt(sum(w * w for w in va.values()))
+        nb = math.sqrt(sum(w * w for w in vb.values()))
+        out[(a, b)] = dot / (na * nb) if na > 0 and nb > 0 else 0.0
+    return out
+
+
+@pytest.fixture(scope="module")
+def structured(spark, tiny_tables):
+    from address_match_recommend_spark.operators.canonicalize import canonicalize
+    from address_match_recommend_spark.operators.structure import (
+        boost_weights,
+        tokens_with_structure,
+    )
+
+    conv = canonicalize(tiny_tables["transcripts"]).persist()
+    ids = sorted(r["conv_id"] for r in conv.select("conv_id").collect())
+    pairs = [(a, b) for i, a in enumerate(ids) for b in ids[i + 1 :]]
+    toks = boost_weights(tokens_with_structure(conv)).persist()
+    return conv, pairs, toks, len(ids)
+
+
+@pytest.mark.parametrize("mode", ["text", "hashed", "structure", "structure_hashed"])
+def test_cosine_equals_dict_reference(spark, structured, mode):
+    """The Arrow pass's cosine equals a dict dot product over the ``vec``
+    maps within 1e-12, for text and xxhash64 keys and for boosted
+    structure vectors with the nturns near-miss term."""
+    from address_match_recommend_spark.functions.tokenize import explode_tokens
+    from address_match_recommend_spark.operators.structure import NTURNS_EXACT_BOOST
+
+    conv, pairs, toks, n = structured
+    use_structure = mode.startswith("structure")
+    tokens = toks if use_structure else explode_tokens(conv)
+    cfg = PipelineConfig(use_structure=use_structure, tau_lo=0.0, tau_hi=1.01)
+    text_vec = tfidf_vectors(tokens, idf_table(tokens, n, cfg), cfg).persist()
+    vec = text_vec
+    if mode.endswith("hashed"):
+        hashed = tokens.withColumn("token", F.xxhash64("token"))
+        vec = tfidf_vectors(hashed, idf_table(hashed, n, cfg), cfg)
+    nearmiss = {}
+    if use_structure:
+        nt = {r["conv_id"]: r["n_turns"] for r in conv.select("conv_id", "n_turns").collect()}
+        wn = {
+            r["conv_id"]: next(w for k, w in r["vec"].items() if k.startswith("nturns:"))
+            for r in text_vec.collect()
+        }
+        bucket = {c: 2 ** math.floor(math.log2(t)) for c, t in nt.items()}
+        for a, b in pairs:
+            if bucket[a] != bucket[b]:
+                damp = 2.0 / (abs(nt[a] - nt[b]) + 1.0) ** 0.25
+                nearmiss[(a, b)] = wn[a] * wn[b] * damp / NTURNS_EXACT_BOOST
+        assert nearmiss
+    want = _reference_cosines(text_vec.collect(), pairs, nearmiss)
+    pair_df = spark.createDataFrame(pairs, "conv_id_a string, conv_id_b string")
+    got = {
+        (r["conv_id_a"], r["conv_id_b"]): r["cosine"]
+        for r in score_pairs(pair_df, vec, conv, cfg).collect()
+    }
+    assert got.keys() == want.keys()
+    assert max(abs(got[k] - want[k]) for k in want) <= 1e-12
+    if use_structure:
+        assert any(nearmiss.get(k, 0.0) > 0 for k in got)
+
+
+def test_coord_density_cosine_equals_reference(spark, structured):
+    """use_coord_density scales each matched text term by the pair's
+    coord·density from the relational ``coord_density`` formula; typed
+    terms (role:/tool:/nturns:) are not scaled."""
+    from address_match_recommend_spark.operators.scoring import coord_density
+
+    conv, pairs, toks, n = structured
+    cfg = PipelineConfig(use_tf=False, use_coord_density=True, tau_lo=0.0)
+    vec = tfidf_vectors(toks, idf_table(toks, n, cfg), cfg).persist()
+    pair_df = spark.createDataFrame(pairs, "conv_id_a string, conv_id_b string")
+    scale = {
+        (r["conv_id_a"], r["conv_id_b"]): r["coord"] * r["density"]
+        for r in coord_density(pair_df, toks).collect()
+    }
+    assert any(s < 1.0 for s in scale.values())
+    want = _reference_cosines(vec.collect(), pairs, scale=scale)
+    got = {
+        (r["conv_id_a"], r["conv_id_b"]): r["cosine"]
+        for r in score_pairs(pair_df, vec, None, cfg, tokens=toks).collect()
+    }
+    assert got.keys() == want.keys()
+    assert max(abs(got[k] - want[k]) for k in want) <= 1e-12

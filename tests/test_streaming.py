@@ -569,3 +569,32 @@ def test_compact_folds_chain_into_new_base(spark, er_state):
     ]), 2)
     got = {(r["conv_id"], r["entity_id"]) for r in er.read_clusters().collect()}
     assert got == before | {("x4", "o3")}
+
+
+def test_second_micro_batch_compiles_little(spark, tiny_corpus, tmp_path):
+    """A bootstrap writes an empty ``clusters_delta``, so the state read
+    of the first micro-batch after it plans the same overlay as every
+    later one and the second batch reuses more of the first one's
+    generated code: 25 classes while the first read was the bare base,
+    15 with the overlay. The rest is data-dependent: AQE drops the anti
+    join and the aggregate over the first, empty delta at run time, and
+    other broadcasts go from empty to non-empty."""
+    from address_match_recommend_spark.datagen import TRANSCRIPTS_DDL
+    from address_match_recommend_spark.session import codegen_compiles
+    from address_match_recommend_spark.streaming.incremental import StreamingER
+
+    tr, clusters = tiny_corpus.transcripts, tiny_corpus.expected_clusters
+    entities = sorted(clusters["entity_id"].unique())
+    new_convs = sorted(
+        clusters[clusters["entity_id"].isin(set(entities[-2:]))]["conv_id"]
+    )
+    mask = tr["conv_id"].isin(set(new_convs))
+    er = StreamingER(spark, str(tmp_path / "state"))
+    er.bootstrap(spark.createDataFrame(tr[~mask], schema=TRANSCRIPTS_DDL))
+    compiled = []
+    for i in range(2):
+        part = tr[tr["conv_id"].isin(set(new_convs[i::2]))]
+        before = codegen_compiles(spark)
+        er.apply_batch(spark.createDataFrame(part, schema=TRANSCRIPTS_DDL), i)
+        compiled.append(codegen_compiles(spark) - before)
+    assert compiled[1] <= 16, compiled
