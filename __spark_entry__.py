@@ -106,7 +106,6 @@ def q_tfidf_top1_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = conv.count()
     idf = idf_table(tokens, n_docs)
     vectors = tfidf_vectors(tokens, idf).persist()  # joined as both pair sides
-    vectors.count()  # populate before the pair join schedules both sides
     pairs = _shingle_pairs(conv)
     cfg = PipelineConfig(tau_lo=0.0)
     scored = score_pairs(pairs, vectors, None, cfg).select(

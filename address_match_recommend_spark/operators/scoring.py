@@ -31,7 +31,7 @@ from functools import partial
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql import types as T
 
 from ..config import PipelineConfig
@@ -41,10 +41,10 @@ from ..materialize import materialize
 #: typed structural terms (operators/structure.py); every other key is text
 TYPED_TERM = r"^(role|tool|nturns):"
 
-#: broadcast the per-conversation side of the pair join while its size is
-#: at most this fraction of the driver's max heap (~440 MB on a 7 GB heap;
-#: the 4-core headline side is ~38 MB plus the text prefixes). Past it the
-#: joins are plain and AQE decides.
+#: broadcast the per-conversation side of the pair join while its rows'
+#: bytes (:func:`_side_bytes`) are at most this fraction of the driver's
+#: max heap (~440 MB on a 7 GB heap); past it the joins are plain and AQE
+#: decides.
 BROADCAST_HEAP_FRACTION = 1 / 16
 
 
@@ -57,14 +57,22 @@ def jw_partitions(n_rows: int, batch_rows: int, max_partitions: int) -> int:
     return max(1, min(-(-n_rows // batch_rows), max_partitions))
 
 
-def _sizes(pairs: DataFrame, vectors: DataFrame) -> tuple[int, int, int]:
-    """(pairs, vector rows, vector map entries) in one aggregate: one
-    shuffle, not one per count."""
-    both = pairs.select(F.lit(1).alias("pair"), F.lit(0).alias("n")).unionByName(
-        vectors.select(F.lit(0).alias("pair"), F.size("vec").alias("n"))
-    )
-    row = both.agg(F.sum("pair"), F.count(F.lit(1)) - F.sum("pair"), F.sum("n")).first()
-    return tuple(v or 0 for v in row)
+def _side_bytes(vectors: DataFrame, prefix_chars: int) -> Column:
+    """Bytes of a side row as ``UnsafeRow`` lays it out: 16 per map entry
+    (id and weight), string ids' UTF-8 bytes in whole words, the conv_id,
+    the text prefix and 112 of headers. At the 4-core headline it reads
+    ≤ 0.7% above the rows' own sizes (51.0 MB long-keyed, 70.7 MB
+    string-keyed; Spark's hashed relation of them takes whole 64 MiB
+    pages: 65.0 and 129.0 MiB, BroadcastExchange ``data size``)."""
+    n = F.size("vec")
+    ids = F.lit(0)
+    if isinstance(vectors.schema["vec"].dataType.keyType, T.StringType):
+        ids = F.aggregate(
+            F.map_keys("vec"),
+            F.lit(0).cast("long"),
+            lambda acc, k: acc + F.ceil(F.octet_length(k) / 8) * 8,
+        )
+    return 112 + 16 * n + ids + F.octet_length("conv_id") + prefix_chars
 
 
 def pair_dots(ids_a, w_a, len_a, ids_b, w_b, len_b, text_scale=None):
@@ -94,7 +102,7 @@ def pair_dots(ids_a, w_a, len_a, ids_b, w_b, len_b, text_scale=None):
     row = key // u
     if text_scale is not None:
         text = np.ones(len(key), dtype=bool)
-        if pa.types.is_string(uniq.type):
+        if not pa.types.is_integer(uniq.type):  # string or large_string
             typed = pc.match_substring_regex(uniq, TYPED_TERM)
             text = ~typed.to_numpy(zero_copy_only=False)[key % u]
         prod = np.where(text, prod * text_scale[row], prod)
@@ -182,9 +190,18 @@ def score_pairs(
     """
     cfg = cfg or PipelineConfig()
     spark = pairs.sparkSession
-    pairs = pairs.select("conv_id_a", "conv_id_b")
     with_text = conversations is not None
     nearmiss = with_text and cfg.use_structure and "n_turns" in conversations.columns
+    # The pairs are read once: a lazy pair plan (a postings join, a
+    # self-join) would otherwise run for the count and again for the
+    # pass. Their count rides on the materializing job; the side's bytes
+    # take one narrow job over ``vectors`` (an aggregate would take two).
+    n_pairs, sizes = Observation(), Observation()
+    count = F.count(F.lit(1)).alias("n")
+    pairs = materialize(pairs.select("conv_id_a", "conv_id_b").observe(n_pairs, count), cfg)
+    side_bytes = _side_bytes(vectors, cfg.jw_prefix_chars if with_text else 0)
+    noop = vectors.observe(sizes, F.sum(side_bytes).alias("b")).write.format("noop")
+    noop.mode("overwrite").save()
     side = vectors.select(
         "conv_id",
         "vec",
@@ -204,25 +221,15 @@ def score_pairs(
             ntok = F.xxhash64(ntok)
         side = side.withColumn("w_n", F.element_at("vec", ntok))
     side = side.drop("vec")
-    n_pairs, n_rows, n_entries = _sizes(pairs, vectors)
-    # 16 bytes per map entry plus each row's id and text prefix. Spark's
-    # own plan estimate is no guide: on a checkpointed vectors frame of a
-    # few hundred rows it reads tens to hundreds of GB.
-    side_bytes = 16 * n_entries + n_rows * (64 + cfg.jw_prefix_chars * with_text)
+    # Spark's own plan estimate is no guide: on a checkpointed vectors
+    # frame of a few hundred rows it reads tens to hundreds of GB.
     heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
-    if side_bytes <= heap * BROADCAST_HEAP_FRACTION:
+    if (sizes.get["b"] or 0) <= heap * BROADCAST_HEAP_FRACTION:
         side = F.broadcast(side)
 
     def one(s: str) -> DataFrame:
         return side.select(*[F.col(c).alias(f"{c}_{s}") for c in side.columns])
 
-    # One Python task per Arrow batch, not full width: each task pays a
-    # fixed ~0.24 s of worker CPU before its first row (4-vCPU host,
-    # Python 3.11, Spark 4.1: pyspark's worker_util.setup_spark_files
-    # calls importlib.invalidate_caches(), so every zipimporter re-reads
-    # pyspark.zip's directory).
-    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
-    pairs = pairs.coalesce(jw_partitions(n_pairs, batch_rows, cfg.shuffle_partitions))
     joined = pairs.join(one("a"), "conv_id_a").join(one("b"), "conv_id_b")
     adj, scale = F.lit(0.0), F.lit(1.0)
     if nearmiss:
@@ -238,11 +245,19 @@ def score_pairs(
         joined = joined.join(cd, ["conv_id_a", "conv_id_b"], "left")
         scale = F.coalesce("coord", F.lit(1.0)) * F.coalesce("density", F.lit(1.0))
     texts = ["text_a", "text_b"] if with_text else []
+    # One Python task per Arrow batch, not full width: each task pays a
+    # fixed ~0.24 s of worker CPU before its first row (4-vCPU host,
+    # Python 3.11, Spark 4.1: pyspark's worker_util.setup_spark_files
+    # calls importlib.invalidate_caches(), so every zipimporter re-reads
+    # pyspark.zip's directory). Coalescing after the joins holds that
+    # width whichever join strategy runs; it narrows only the scan of
+    # the materialized pairs or the last join's shuffle read.
+    batch_rows = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
     joined = joined.select(
         *["conv_id_a", "conv_id_b", "ids_a", "ws_a", "ids_b", "ws_b"] + texts,
         adj.cast("double").alias("dot_adj"),
         scale.cast("double").alias("text_scale"),
-    )
+    ).coalesce(jw_partitions(n_pairs.get["n"], batch_rows, cfg.shuffle_partitions))
     schema = pairs.schema.add("cosine", "double").add("jw", "double")
     schema = schema.add("is_match", "boolean")
     run = partial(_score_batches, tau_lo=cfg.tau_lo, tau_hi=cfg.tau_hi)

@@ -238,7 +238,6 @@ def incremental_update(
     )
     old_vectors = tfidf_vectors(old_partner_tokens, prev_idf, cfg)
     vectors = new_vectors.unionByName(old_vectors).persist()
-    vectors.count()
 
     scored = score_pairs(pairs, vectors, representatives, cfg)
     match_edges = scored.filter(F.col("is_match")).select("conv_id_a", "conv_id_b")

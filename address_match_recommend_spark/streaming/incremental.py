@@ -108,6 +108,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
+from ..materialize import materialize
 from ..plans.incremental import incremental_update
 from ..plans.pipeline import run_pipeline
 
@@ -278,8 +279,6 @@ class StreamingER:
             for v in versions
             if v >= base and os.path.isdir(f"{self._vdir(v)}/clusters_delta")
         ]
-        if not paths:  # a state written before bases carried a delta
-            return base_df
         deltas = self.spark.read.schema(CLUSTERS_DDL).parquet(*paths).select(
             "conv_id",
             "entity_id",
@@ -473,7 +472,10 @@ class StreamingER:
             prev_reps = self._read_union("representatives", state_versions)
             prev_post = self._read_union("postings", state_versions)
             prev_idf = self.spark.read.parquet(f"{self._vdir(base)}/idf")
-            prev_clusters = self.read_clusters()
+            # resolved once: the update reads it in several joins, and a
+            # lazy overlay would run its delta aggregate and anti join in
+            # each of them
+            prev_clusters = materialize(self.read_clusters(), self.cfg, eager=True)
 
             inc = incremental_update(
                 prev_conv,

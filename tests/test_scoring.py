@@ -293,3 +293,49 @@ def test_coord_density_cosine_equals_reference(spark, structured):
     }
     assert got.keys() == want.keys()
     assert max(abs(got[k] - want[k]) for k in want) <= 1e-12
+
+
+@pytest.mark.parametrize("coord", [False, True], ids=["text", "coord_density"])
+def test_plain_join_path_equals_broadcast_path(spark, structured, monkeypatch, coord):
+    """Past the broadcast size the side joins are plain (forced here: a
+    zero heap fraction and no AQE broadcast). The pass then scores every
+    pair exactly as on the broadcast path, in the same one Python task
+    per Arrow batch, with the near-miss term and the coord·density scale."""
+    from address_match_recommend_spark.operators import scoring
+
+    conv, pairs, toks, n = structured
+    cfg = PipelineConfig(use_structure=True, use_coord_density=coord, tau_lo=0.0, tau_hi=0.95)
+    vec = tfidf_vectors(toks, idf_table(toks, n, cfg), cfg).localCheckpoint()
+    # checkpointed inputs, so the plans below show the scorer's joins only
+    conv, toks = conv.localCheckpoint(), toks.localCheckpoint()
+    pair_df = spark.createDataFrame(pairs, "conv_id_a string, conv_id_b string")
+    plans = []
+    materialize = scoring.materialize
+
+    def traced(df, *args, **kwargs):
+        out = materialize(df, *args, **kwargs)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(scoring, "materialize", traced)
+
+    def run():
+        out = score_pairs(pair_df, vec, conv, cfg, tokens=toks if coord else None)
+        return sorted(tuple(r) for r in out.collect()), out.rdd.getNumPartitions(), plans[-1]
+
+    broadcast = run()
+    monkeypatch.setattr(scoring, "BROADCAST_HEAP_FRACTION", 0)
+    keys = ["spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold"]
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        plain = run()
+    finally:
+        for k, v in saved.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert "BroadcastHashJoin" in broadcast[2]
+    assert "BroadcastHashJoin" not in plain[2] and "SortMergeJoin" in plain[2]
+    assert any(r[3] is not None for r in plain[0])  # band rows carry jw
+    assert plain[0] == broadcast[0]
+    assert plain[1] == broadcast[1] == 1
