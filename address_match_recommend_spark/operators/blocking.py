@@ -130,10 +130,14 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
     n_salts = F.greatest(
         F.ceil(F.col("df") / F.lit(cfg.salt_bucket)).cast("int"), F.lit(1)
     )
+    # ``is_new`` (optional, plans/incremental.py): a micro-batch's frame
+    # marks its own rows, and only pairs with a new side are emitted
+    has_new = "is_new" in post.columns
     salted = post.select(
         "token",
         F.pmod(F.xxhash64("conv_id"), n_salts).cast("int").alias("salt"),
         "conv_id",
+        *(["is_new"] if has_new else []),
     )
     if need_count:
         # Per-conversation budgeted token set, hashed to longs for a
@@ -165,14 +169,14 @@ def candidate_pairs(post: DataFrame, cfg: PipelineConfig | None = None) -> DataF
 
     a = salted.alias("a")
     b = salted.alias("b")
-    matched = a.join(
-        b,
-        on=[
-            F.col("a.token") == F.col("b.token"),
-            F.col("a.salt") == F.col("b.salt"),
-            F.col("a.conv_id") < F.col("b.conv_id"),
-        ],
-    )
+    on = [
+        F.col("a.token") == F.col("b.token"),
+        F.col("a.salt") == F.col("b.salt"),
+        F.col("a.conv_id") < F.col("b.conv_id"),
+    ]
+    if has_new:
+        on.append(F.col("a.is_new") | F.col("b.is_new"))
+    matched = a.join(b, on=on)
     if need_count:
         # Pair-level true count, evaluated per matched row pre-aggregation
         # (every row of one pair yields the same value).

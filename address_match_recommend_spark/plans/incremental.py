@@ -18,9 +18,14 @@ Strategy (anti-join + re-cluster of affected blocks, SURVEY §2.10):
    is NOT refit per batch — identical to the reference, which computes IDF
    from the stored corpus, and it keeps old vectors valid. Refit on a
    cadence (e.g. after corpus grows 2×) with a full run.
-4. Candidate pairs = new postings ⋈ (old ∪ new) postings on blocking
-   token — only blocks CONTAINING a new conversation produce pairs; the
-   old corpus's pairs are never regenerated.
+4. Candidate pairs come from ``operators/blocking.candidate_pairs``, the
+   batch pipeline's operator, over the posting blocks the batch touches:
+   the old postings of the batch's tokens plus the batch's own, marked
+   ``is_new``, so only pairs with a new side are emitted and the old
+   corpus's pairs are never regenerated. Every row is salted with the df
+   this batch gives its token, so both sides of a block agree on its
+   sub-blocks, and the shared-token count is exact for every pair with a
+   new side (a new conversation's tokens are all batch tokens).
 5. Re-clustering is LOCALIZED to components the batch touches (round 5):
    the prior clustering of an entity re-enters as star edges
    (conv_id → entity_id, connectivity-equivalent to its full old edge
@@ -42,16 +47,17 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
+from pyspark.sql.types import LongType
 
 from ..config import PipelineConfig
 from ..functions.tokenize import explode_tokens
-from ..operators.blocking import postings as build_postings
+from ..materialize import materialize
+from ..operators.blocking import candidate_pairs, postings as build_postings
 from ..operators.canonicalize import canonicalize
 from ..operators.clustering import connected_components
-from ..operators.dedup import dedup_exact
 from ..operators.scoring import score_pairs
-from ..operators.tfidf import tfidf_vectors
+from ..operators.tfidf import tfidf_vectors, token_counts
 
 
 @dataclass
@@ -85,43 +91,45 @@ def incremental_update(
     cfg: PipelineConfig | None = None,
 ) -> IncrementalResult:
     cfg = cfg or PipelineConfig()
+    observed: dict[str, Observation] = {}
+
+    def once(df: DataFrame, count_as: str | None = None) -> DataFrame:
+        """Materialize a frame this update reads more than once; its row
+        count, when asked for, comes from the same job."""
+        if count_as:
+            observed[count_as] = Observation()
+            df = df.observe(observed[count_as], F.count(F.lit(1)).alias("n"))
+        return materialize(df, cfg, eager=True)
 
     # 1. canonicalize the batch only; drop conv_ids we already have
-    new_conv = canonicalize(new_transcripts, cfg).join(
-        prev_conversations.select("conv_id"), "conv_id", "left_anti"
-    ).persist()
-    n_new = new_conv.count()
-
-    conversations = prev_conversations.unionByName(new_conv)
-
-    # 2. exact duplicates of EXISTING texts → direct edge to representative
+    # 2. each new conversation's representative: the old one that owns its
+    #    text (an exact duplicate of an EXISTING text links straight to it,
+    #    unscored), else the batch's min conv_id of that text (intra-batch
+    #    duplicates collapse, as dedup_exact does)
     prev_hashes = prev_representatives.select(
         "text_hash", F.col("conv_id").alias("rep_id")
     )
-    dup_edges_old = (
-        new_conv.select("conv_id", "text_hash")
-        .join(prev_hashes, "text_hash")
-        .select(
-            F.least("conv_id", "rep_id").alias("conv_id_a"),
-            F.greatest("conv_id", "rep_id").alias("conv_id_b"),
-        )
+    tagged = once(
+        canonicalize(new_transcripts, cfg)
+        .join(prev_conversations.select("conv_id"), "conv_id", "left_anti")
+        .join(prev_hashes, "text_hash", "left")
+        .withColumn(
+            "rep_id",
+            F.coalesce(
+                "rep_id", F.min("conv_id").over(Window.partitionBy("text_hash"))
+            ),
+        ),
+        "n_new_conversations",
     )
-    # representatives among the new batch itself (intra-batch dups collapse)
-    new_reps = dedup_exact(new_conv).join(
-        prev_hashes.select("text_hash"), "text_hash", "left_anti"
-    ).persist()
+    new_conv = tagged.select(*prev_conversations.columns)
+    conversations = prev_conversations.unionByName(new_conv)
+    new_reps = tagged.filter(F.col("conv_id") == F.col("rep_id")).select(
+        *prev_representatives.columns
+    )
     representatives = prev_representatives.unionByName(new_reps)
-    dup_edges_new = (
-        new_conv.select("conv_id", "text_hash")
-        .join(
-            new_reps.select("text_hash", F.col("conv_id").alias("rep_id")),
-            "text_hash",
-        )
-        .filter(F.col("conv_id") != F.col("rep_id"))
-        .select(
-            F.least("conv_id", "rep_id").alias("conv_id_a"),
-            F.greatest("conv_id", "rep_id").alias("conv_id_b"),
-        )
+    dup_edges = tagged.filter(F.col("conv_id") != F.col("rep_id")).select(
+        F.least("conv_id", "rep_id").alias("conv_id_a"),
+        F.greatest("conv_id", "rep_id").alias("conv_id_b"),
     )
 
     # 3. tokenize new reps; weight with the existing (broadcast) IDF —
@@ -133,111 +141,87 @@ def incremental_update(
     # old-partner side below) identically, so all joins against prior
     # state stay type- and identity-consistent whatever cfg the bootstrap
     # used.
-    from pyspark.sql.types import LongType
-
     state_hashed = isinstance(prev_idf.schema["token"].dataType, LongType)
 
-    def _domain(tok: DataFrame) -> DataFrame:
-        return (
-            tok.withColumn("token", F.xxhash64("token")) if state_hashed else tok
+    def _tokens(reps: DataFrame) -> DataFrame:
+        tok = explode_tokens(reps, cfg)
+        return tok.withColumn("token", F.xxhash64("token")) if state_hashed else tok
+
+    # one pass over the batch's token stream, read by df, postings and
+    # the vectors, as in run_pipeline's tokenize stage
+    new_counts = once(token_counts(_tokens(new_reps)))
+    # the old postings of the batch's tokens: O(batch) rows, the only
+    # part of the index this batch can pair with
+    old_post = once(
+        prev_postings.select("token", "conv_id").join(
+            F.broadcast(new_counts.select("token").distinct()), "token", "left_semi"
         )
-
-    new_tokens = _domain(explode_tokens(new_reps, cfg)).persist()
-    new_tokens.count()
-    new_vectors = tfidf_vectors(new_tokens, prev_idf, cfg)
-
-    # Blocking IDF: tokens the old corpus never saw (e.g. the signature
-    # vocabulary of a brand-new entity) must still block within the batch,
-    # or duplicates arriving together could never pair. Their df is the
-    # batch-local document frequency; their idf is MissingIdf.
-    from ..operators.tfidf import document_frequency
-
-    unseen_batch = document_frequency(new_tokens).join(
-        prev_idf.select("token"), "token", "left_anti"
     )
-    # Cumulative document frequency for unseen tokens (ADVICE r4): the
-    # bootstrap-frozen IDF means a token outside the bootstrap vocabulary
-    # stays "unseen" in EVERY batch; judging max_block_df against its
-    # batch-local df alone re-admits a cross-batch-hot token every batch,
-    # so its posting list accumulates unboundedly and the incremental
-    # pair join explodes quadratically in it. Unseen tokens are indexed
-    # by earlier batches through this very path, so their true running df
-    # is batch df + occurrences already in prev_postings — max_block_df
-    # applies to THAT, matching what a single-batch arrival of the same
-    # conversations would have decided. (Already-written postings of a
-    # token that crosses the cap stay on disk but generate no pairs: the
-    # pair join is new-side ⋈ all, and the token leaves the new side.)
-    prev_unseen_n = (
-        prev_postings.join(
-            F.broadcast(unseen_batch.select("token")), "token", "left_semi"
-        )
+
+    # Blocking df, for the batch's tokens (the only ones postings reads):
+    # a token the bootstrap saw keeps its frozen df. Tokens the old corpus
+    # never saw (e.g. the signature vocabulary of a brand-new entity) must
+    # still block, or duplicates arriving together could never pair, and
+    # their df is CUMULATIVE (ADVICE r4): the bootstrap-frozen IDF means a
+    # token outside the bootstrap vocabulary stays "unseen" in EVERY batch;
+    # judging max_block_df against its batch-local df alone would re-admit
+    # a cross-batch-hot token every batch, so its posting list would grow
+    # without bound. Unseen tokens are indexed by earlier batches through
+    # this very path, so their running df is the batch's rows plus the old
+    # postings' rows of the token — max_block_df applies to THAT, matching
+    # what a single-batch arrival of the same conversations would have
+    # decided. (Already-written postings of a token that crosses the cap
+    # stay on disk but generate no pairs: the token leaves the new side,
+    # and every pair needs one.)
+    # Index unseen tokens IMMEDIATELY, even at cumulative df 1 — the
+    # reference inserts every record's tokens into the index on ImportAddr
+    # (/root/reference/core/similarity.go:551-581). min_block_df assumes a
+    # static corpus, where a df-1 token can never produce a pair; here a
+    # FUTURE batch can arrive sharing the token — dropping it would
+    # silently lose the pair and make recall depend on how arrivals were
+    # split into micro-batches (pinned by the streaming split-invariance
+    # test). Clamping df up to min_block_df admits the token to the
+    # blockable band; the ``clamped`` flag lets the per-conversation
+    # rarest-token budget prefer genuinely shared tokens over clamped
+    # singletons at equal df (ADVICE r4 — operators/blocking.py orders on
+    # it).
+    n_rows = (
+        new_counts.select("token")
+        .unionByName(old_post.select("token"))
         .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("prev_n"))
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    unseen_df = (
-        unseen_batch.join(prev_unseen_n, "token", "left")
-        .withColumn("df", F.col("df") + F.coalesce(F.col("prev_n"), F.lit(0)))
-        .drop("prev_n")
-        # Index unseen tokens IMMEDIATELY, even at cumulative df 1 — the
-        # reference inserts every record's tokens into the index on
-        # ImportAddr (/root/reference/core/similarity.go:551-581).
-        # min_block_df assumes a static corpus, where a df-1 token can
-        # never produce a pair; here a FUTURE batch can arrive sharing
-        # the token — dropping it would silently lose the pair and make
-        # recall depend on how arrivals were split into micro-batches
-        # (pinned by the streaming split-invariance test). Clamping df up
-        # to min_block_df admits the token to the blockable band; the
-        # ``clamped`` flag lets the per-conversation rarest-token budget
-        # prefer genuinely shared tokens over clamped singletons at equal
-        # df (ADVICE r4 — operators/blocking.py orders on it).
-        .withColumn("clamped", F.col("df") < F.lit(cfg.min_block_df))
-        .withColumn("df", F.greatest(F.col("df"), F.lit(cfg.min_block_df)))
-        .withColumn("idf", F.lit(float(cfg.missing_idf)))
+    blocking_df = n_rows.join(
+        prev_idf.select("token", F.col("df").alias("seen_df")), "token", "left"
+    ).select(
+        "token",
+        F.coalesce("seen_df", F.greatest("n", F.lit(cfg.min_block_df))).alias("df"),
+        (F.col("seen_df").isNull() & (F.col("n") < cfg.min_block_df)).alias("clamped"),
     )
-    blocking_idf = (
-        prev_idf.select("token", "df", "idf")
-        .withColumn("clamped", F.lit(False))
-        .unionByName(unseen_df.select("token", "df", "idf", "clamped"))
-    )
+    new_post = once(build_postings(new_counts, blocking_df, cfg))
 
-    # 4. pairs only from blocks containing a new conversation
-    new_post = build_postings(new_tokens, blocking_idf, cfg)
-    all_post = prev_postings.unionByName(new_post).persist()
-    all_post.count()
-    postings_new_side = new_post.select(
-        "token", F.col("conv_id").alias("new_id")
+    # 4. pairs from the blocks a new conversation sits in, through the
+    #    batch operator. Every row of a block takes the df of the block's
+    #    new rows, not the one stored with an old row (an unseen token's
+    #    cumulative df can cross a salt boundary between batches), so both
+    #    sides agree on the sub-blocks; old rows of a token no new row
+    #    carries drop out.
+    block = (
+        old_post.withColumn("df", F.lit(None).cast(new_post.schema["df"].dataType))
+        .withColumn("is_new", F.lit(False))
+        .unionByName(new_post.withColumn("is_new", F.lit(True)))
+        .withColumn("df", F.max("df").over(Window.partitionBy("token")))
     )
-    matched = (
-        postings_new_side.join(all_post, "token")
-        .filter(F.col("new_id") != F.col("conv_id"))
-        .select(
-            "token",
-            F.least("new_id", "conv_id").alias("conv_id_a"),
-            F.greatest("new_id", "conv_id").alias("conv_id_b"),
-        )
-        .distinct()  # new↔new pairs arrive in both join directions
-    )
-    pairs = (
-        matched.groupBy("conv_id_a", "conv_id_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= max(cfg.min_shared_tokens, 1))
-        .drop("n_shared")
-    )
+    pairs = once(candidate_pairs(block.filter(F.col("df").isNotNull()), cfg))
 
-    # old-side vectors: only partners that actually appear in a pair
-    partner_ids = (
-        pairs.select(F.col("conv_id_a").alias("conv_id"))
-        .unionByName(pairs.select(F.col("conv_id_b").alias("conv_id")))
-        .distinct()
-        .join(new_reps.select("conv_id"), "conv_id", "left_anti")
+    # old-side vectors: only old partners that actually appear in a pair
+    partner_ids = pairs.select(F.col("conv_id_a").alias("conv_id")).unionByName(
+        pairs.select(F.col("conv_id_b").alias("conv_id"))
     )
-    old_partner_tokens = _domain(
-        explode_tokens(
-            prev_representatives.join(partner_ids, "conv_id", "left_semi"), cfg
-        )
+    old_counts = token_counts(
+        _tokens(prev_representatives.join(partner_ids, "conv_id", "left_semi"))
     )
-    old_vectors = tfidf_vectors(old_partner_tokens, prev_idf, cfg)
-    vectors = new_vectors.unionByName(old_vectors).persist()
+    vectors = once(tfidf_vectors(new_counts.unionByName(old_counts), prev_idf, cfg))
 
     scored = score_pairs(pairs, vectors, representatives, cfg)
     match_edges = scored.filter(F.col("is_match")).select("conv_id_a", "conv_id_b")
@@ -250,25 +234,20 @@ def incremental_update(
     #    (/root/reference/core/similarity.go:551-581). Only components the
     #    batch's edges TOUCH re-cluster now; everything else inherits its
     #    label without being read into the CC job or rewritten.
-    new_edges = (
-        match_edges.unionByName(dup_edges_old).unionByName(dup_edges_new)
-    ).persist()
-    endpoints = (
-        new_edges.select(F.col("conv_id_a").alias("conv_id"))
-        .unionByName(new_edges.select(F.col("conv_id_b").alias("conv_id")))
-        .distinct()
-    )
-    touched_entities = (
-        prev_clusters.join(endpoints, "conv_id", "left_semi")
-        .select("entity_id")
-        .distinct()
+    new_edges = once(match_edges.unionByName(dup_edges), "n_new_edges")
+    endpoints = new_edges.select(
+        F.col("conv_id_a").alias("conv_id")
+    ).unionByName(new_edges.select(F.col("conv_id_b").alias("conv_id")))
+    touched_entities = prev_clusters.join(endpoints, "conv_id", "left_semi").select(
+        "entity_id"
     )
     # every member of a touched cluster enters the subgraph: a merge can
     # relabel ALL of them, and the merged label (component-min conv_id)
     # must be the min over the full membership of every cluster involved
-    touched_members = prev_clusters.join(
-        touched_entities, "entity_id", "left_semi"
-    ).persist()
+    touched_members = once(
+        prev_clusters.join(touched_entities, "entity_id", "left_semi"),
+        "n_touched_members",
+    )
     star_edges = touched_members.filter(
         F.col("conv_id") != F.col("entity_id")
     ).select(
@@ -281,21 +260,17 @@ def incremental_update(
     # clusters DELTA: first labels for the new conversations + touched
     # members whose label CHANGED. Untouched/unchanged rows are never
     # emitted — the per-batch clusters write is O(affected), not O(corpus).
-    new_assign = (
-        new_conv.select("conv_id")
+    # (a new conversation outside every edge is its own entity)
+    clusters_delta = once(
+        new_conv.select("conv_id", F.lit(None).cast("string").alias("prev_entity"))
+        .unionByName(touched_members.withColumnRenamed("entity_id", "prev_entity"))
         .join(components, "conv_id", "left")
-        .select(
-            "conv_id",
-            F.coalesce(F.col("entity_id"), F.col("conv_id")).alias("entity_id"),
+        .withColumn("entity_id", F.coalesce("entity_id", "conv_id"))
+        .filter(
+            F.col("prev_entity").isNull() | (F.col("entity_id") != F.col("prev_entity"))
         )
-    )
-    old_changed = (
-        touched_members.withColumnRenamed("entity_id", "prev_entity")
-        .join(components, "conv_id")
-        .filter(F.col("entity_id") != F.col("prev_entity"))
         .select("conv_id", "entity_id")
     )
-    clusters_delta = new_assign.unionByName(old_changed)
     clusters = prev_clusters.join(
         clusters_delta.select("conv_id"), "conv_id", "left_anti"
     ).unionByName(clusters_delta)
@@ -303,19 +278,14 @@ def incremental_update(
     return IncrementalResult(
         conversations=conversations,
         representatives=representatives,
-        postings=all_post,
+        postings=prev_postings.unionByName(new_post),
         new_pairs=pairs,
         scored=scored,
         clusters=clusters,
-        metrics={
-            "n_new_conversations": n_new,
-            # localized-clustering observability (both frames are
-            # persisted and O(affected) by design): a touched-member
-            # count approaching the corpus size means the batch bridged
-            # nearly every cluster — or a blocking bug admitted one
-            "n_new_edges": new_edges.count(),
-            "n_touched_members": touched_members.count(),
-        },
+        # a touched-member count approaching the corpus size means the
+        # batch bridged nearly every cluster — or a blocking bug admitted
+        # one
+        metrics={k: obs.get["n"] for k, obs in observed.items()},
         new_conversations=new_conv,
         new_representatives=new_reps,
         new_postings=new_post,

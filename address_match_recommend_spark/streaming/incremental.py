@@ -89,12 +89,19 @@ snapshot commit — the semantics map 1:1.
 Batch-split invariance: the FINAL clustering does not depend on how the
 arriving conversations are partitioned into micro-batches (one batch vs
 many), because (a) the IDF is frozen at bootstrap and old-side vectors
-are recomputed from it per batch, and (b) tokens outside the bootstrap
+are recomputed from it per batch, (b) tokens outside the bootstrap
 vocabulary are indexed immediately at ANY batch df (see the unseen-df
 clamp in plans/incremental.py — without it, a new entity's signature
-token arriving one conversation per batch would never block). Exact
-when the per-conversation blocking-token budget is not binding (the
-budget orders by df, which is batch-local for unseen tokens); pinned by
+token arriving one conversation per batch would never block), and (c)
+every batch pairs through the batch pipeline's salted blocking with ONE
+df per token: each row of a block, old or new, is salted with the df
+this batch gives the token, so both sides of a pair agree on its
+sub-block. A bootstrap token's df is frozen, so its sub-blocks are the
+same in every batch. An unseen token's df is cumulative, so which
+sub-blocks it splits into, and where it falls in the per-conversation
+blocking-token budget (which orders by df), depend on the batch it is
+read in. The invariance is therefore exact while the budget does not
+bind and no unseen token's df passes ``salt_bucket``; pinned by
 ``tests/test_streaming.py::test_streaming_er_split_invariance``.
 """
 
@@ -108,7 +115,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..materialize import materialize
 from ..plans.incremental import incremental_update
 from ..plans.pipeline import run_pipeline
 
@@ -269,9 +275,10 @@ class StreamingER:
         method becomes a plain table read."""
         versions = self._committed_versions()
         base = self._base_of(versions)
-        base_df = self.spark.read.parquet(
+        # the known schema: inferring one costs a Spark job per read
+        base_df = self.spark.read.schema(CLUSTERS_DDL).parquet(
             f"{self._vdir(base)}/clusters"
-        ).select("conv_id", "entity_id")
+        )
         # from the base on: a base writes an empty delta, so every read
         # plans the overlay below, the first after a bootstrap included
         paths = [
@@ -472,17 +479,14 @@ class StreamingER:
             prev_reps = self._read_union("representatives", state_versions)
             prev_post = self._read_union("postings", state_versions)
             prev_idf = self.spark.read.parquet(f"{self._vdir(base)}/idf")
-            # resolved once: the update reads it in several joins, and a
-            # lazy overlay would run its delta aggregate and anti join in
-            # each of them
-            prev_clusters = materialize(self.read_clusters(), self.cfg, eager=True)
-
+            # the clusters overlay stays lazy: the update reads it only in
+            # the one job that materializes the touched members
             inc = incremental_update(
                 prev_conv,
                 prev_reps,
                 prev_idf,
                 prev_post,
-                prev_clusters,
+                self.read_clusters(),
                 batch_df,
                 self.cfg,
             )

@@ -79,3 +79,50 @@ def test_assign_entities_singletons(spark):
     )
     got = {r["conv_id"]: r["entity_id"] for r in assign_entities(conv, comps).collect()}
     assert got == {"a": "a", "b": "a", "c": "c", "lone": "lone"}
+
+
+def test_hot_token_and_bridged_component(spark):
+    """A hand-built corpus with one token in almost every conversation
+    and four entities bridged through one conversation (a fifth stays
+    apart). Under a small ``max_block_df`` the hot token never reaches the
+    postings; the bridged entities form one component; the driver
+    union-find and the distributed loop return the same clusters."""
+    import dataclasses
+    import datetime
+
+    from pyspark.sql import functions as F
+
+    from address_match_recommend_spark.plans.pipeline import run_pipeline
+
+    words = {e: [f"ent{e}w{i}" for i in range(5)] for e in range(5)}
+    rows = []
+    for e, ws in words.items():
+        rows.append((f"e{e}a", " ".join(ws + ["hotzz"])))
+        rows.append((f"e{e}b", " ".join(ws[::-1] + ["hotzz"])))
+    rows.append(("bridge", " ".join(w for e in range(4) for w in words[e])))
+    ts = datetime.datetime(2025, 1, 1)
+    transcripts = spark.createDataFrame(
+        [(cid, 0, "user", text, "", ts) for cid, text in rows],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    # the bridge scores cosine 0.5 against each entity's conversations;
+    # entities share nothing but the hot token (df 10 of 11)
+    cfg = PipelineConfig(
+        max_block_df=4, tau_hi=0.45, tau_lo=0.30, hash_token_features=False
+    )
+    runs = {}
+    for name, c in {
+        "driver_union_find": cfg,
+        "distributed_loop": dataclasses.replace(cfg, cc_driver_max_edges=0),
+    }.items():
+        res = run_pipeline(transcripts, c)
+        assert res.idf.filter(F.col("token") == "hotzz").first()["df"] == 10
+        assert res.postings.filter(F.col("token") == "hotzz").count() == 0
+        runs[name] = {(r["conv_id"], r["entity_id"]) for r in res.clusters.collect()}
+
+    assert runs["driver_union_find"] == runs["distributed_loop"]
+    groups: dict[str, set] = {}
+    for conv, ent in runs["driver_union_find"]:
+        groups.setdefault(ent, set()).add(conv)
+    bridged = {"bridge"} | {f"e{e}{s}" for e in range(4) for s in "ab"}
+    assert sorted(groups.values(), key=len) == [{"e4a", "e4b"}, bridged]

@@ -227,3 +227,39 @@ def test_unseen_hot_token_capped_by_cumulative_df(spark):
     # already-indexed hotzz conversations
     assert inc1.new_postings.filter(F.col("token") == "hotzz").count() == 0
     assert inc1.new_pairs.count() == 0
+
+
+def test_fold_pairs_equal_batch_operator_on_salted_blocks(spark, split_corpus):
+    """A micro-batch pairs through the batch operator: its new pairs are
+    ``candidate_pairs`` over the old and new postings, each row salted
+    with the df the batch gives its token, keeping the pairs with a new
+    side. ``salt_bucket=2`` splits the blocks into sub-blocks, so a fold
+    that joined the postings unsalted would emit pairs across them."""
+    from address_match_recommend_spark.config import PipelineConfig
+    from address_match_recommend_spark.operators.blocking import candidate_pairs
+
+    old_tr, new_tr, _ = split_corpus
+    cfg = PipelineConfig(salt_bucket=2, shuffle_partitions=8)
+    prev = run_pipeline(old_tr, cfg)
+    inc = incremental_update(
+        prev.conversations, prev.representatives, prev.idf,
+        prev.postings, prev.clusters, new_tr, cfg,
+    )
+    batch_df = inc.new_postings.select(
+        "token", F.col("df").alias("batch_df")
+    ).distinct()
+    union = (
+        prev.postings.unionByName(inc.new_postings)
+        .join(batch_df, "token", "left")
+        .withColumn("df", F.coalesce("batch_df", "df"))
+        .drop("batch_df")
+    )
+    new_ids = {r["conv_id"] for r in inc.new_conversations.select("conv_id").collect()}
+    want = {
+        (r["conv_id_a"], r["conv_id_b"])
+        for r in candidate_pairs(union, cfg).collect()
+        if r["conv_id_a"] in new_ids or r["conv_id_b"] in new_ids
+    }
+    got = {(r["conv_id_a"], r["conv_id_b"]) for r in inc.new_pairs.collect()}
+    assert want, "the split corpus must pair some new conversation"
+    assert got == want, (sorted(got - want)[:5], sorted(want - got)[:5])

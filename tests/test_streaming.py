@@ -598,3 +598,35 @@ def test_second_micro_batch_compiles_little(spark, tiny_corpus, tmp_path):
         er.apply_batch(spark.createDataFrame(part, schema=TRANSCRIPTS_DDL), i)
         compiled.append(codegen_compiles(spark) - before)
     assert compiled[1] <= 16, compiled
+
+
+def test_micro_batch_runs_few_jobs(spark, tiny_corpus, tmp_path):
+    """One ``apply_batch`` on the tiny test stream runs at most 57 Spark
+    jobs, counted from the status store's job list around the call: the
+    batch pairs through ``candidate_pairs`` on the blocks it touches and
+    each frame the fold derives is materialized once. The count depends
+    on the plans and the data, not on the host's cores."""
+    from address_match_recommend_spark.datagen import TRANSCRIPTS_DDL
+    from address_match_recommend_spark.streaming.incremental import StreamingER
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def job_ids() -> set[int]:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(spark.sparkContext._gateway.jvm.java.util.ArrayList())
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    tr, clusters = tiny_corpus.transcripts, tiny_corpus.expected_clusters
+    entities = sorted(clusters["entity_id"].unique())
+    new_convs = sorted(
+        clusters[clusters["entity_id"].isin(set(entities[-3:]))]["conv_id"]
+    )
+    mask = tr["conv_id"].isin(set(new_convs))
+    er = StreamingER(spark, str(tmp_path / "state"))
+    er.bootstrap(spark.createDataFrame(tr[~mask], schema=TRANSCRIPTS_DDL))
+    batch = spark.createDataFrame(tr[mask], schema=TRANSCRIPTS_DDL)
+    before = job_ids()
+    er.apply_batch(batch, 0)
+    n_jobs = len(job_ids() - before)
+    assert n_jobs <= 57, n_jobs
+    assert er.read_clusters().count() == tr["conv_id"].nunique()
